@@ -39,7 +39,10 @@ tests/test_properties.py::test_arrival_order_invariance).
 from __future__ import annotations
 
 import contextlib
+import json
 import os
+import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,13 +60,16 @@ class StateLockError(RuntimeError):
     OPTIMIZE's part-level lock; on Delta the problem disappears — ACID)."""
 
 
-# Paths whose _state_lock THIS process currently holds. Lets read_state
-# distinguish "called under the caller's own lock" (heal directly; the
-# O_EXCL lock is non-reentrant, so re-acquiring would raise StateLockError
-# against the caller's own fence — ADVICE r9) from a lock-free read (take
-# the lock, heal under it). Single-mutator-per-process assumption, same as
-# the lock itself (host-local local[] harness; Delta/ACID at scale).
-_HELD_LOCKS: set[str] = set()
+# (path, thread id) pairs whose _state_lock a thread of THIS process holds.
+# Lets read_state distinguish "called under the caller's own lock" (heal
+# directly; the O_EXCL lock is non-reentrant, so re-acquiring would raise
+# StateLockError against the caller's own fence — ADVICE r9) from a
+# lock-free read (take the lock, heal under it). Ownership is per THREAD:
+# foreachBatch runs on a Py4J callback thread, so a caller-thread read
+# during a live batch must hit the fence (StateLockError), not heal
+# alongside the batch's bucket swap. Host-local, same as the lock itself
+# (local[] harness; Delta/ACID at scale).
+_HELD_LOCKS: set[tuple[str, int]] = set()
 
 
 @contextlib.contextmanager
@@ -86,13 +92,14 @@ def _state_lock(path: str):
             f"state table {path!r} is locked by another upsert/compact "
             f"(lock file {lock!r}; if its owner crashed, call break_state_lock)"
         ) from None
-    _HELD_LOCKS.add(apath)
+    owner_key = (apath, threading.get_ident())
+    _HELD_LOCKS.add(owner_key)
     try:
         os.write(fd, str(os.getpid()).encode())
         os.close(fd)
         yield
     finally:
-        _HELD_LOCKS.discard(apath)
+        _HELD_LOCKS.discard(owner_key)
         # Remove only OUR lock: if break_state_lock misjudged this mutator as
         # crashed and a new mutator re-acquired, the recorded pid differs and
         # the zombie must not delete the new owner's fence.
@@ -101,6 +108,18 @@ def _state_lock(path: str):
                 owner = fh.read().strip()
             if owner == str(os.getpid()):
                 os.remove(lock)
+
+
+@contextlib.contextmanager
+def _own_lock(path: str):
+    """Run under ``path``'s state lock: reuse it if the CALLING thread
+    already holds it (the O_EXCL lock is non-reentrant), otherwise take it —
+    so another thread's hold raises ``StateLockError``."""
+    if (os.path.abspath(path), threading.get_ident()) in _HELD_LOCKS:
+        yield
+    else:
+        with _state_lock(path):
+            yield
 
 
 def _pid_alive(pid: int) -> bool:
@@ -217,6 +236,42 @@ def _bucket_expr(key_cols: tuple[str, ...], n_buckets: int):
     return F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
 
 
+def _touched_buckets(
+    df: DataFrame, key_cols: tuple[str, ...], n_buckets: int
+) -> list[int]:
+    """The sorted distinct key-hash buckets of ``df``'s rows — one small
+    driver collect, bounded by ``n_buckets``, never by data."""
+    return sorted(
+        r[0] for r in df.select(_bucket_expr(key_cols, n_buckets)).distinct().collect()
+    )
+
+
+def _unfenced_buckets_keyed(
+    state: DataFrame | None,
+    touched: list[int],
+    batch_id: int,
+    key_buckets: int,
+    key_cols: tuple[str, ...],
+) -> list[int]:
+    """The per-bucket replay fence: the touched buckets whose rows are still
+    behind ``batch_id`` (``state`` carries an ``applied_bid`` column). Every
+    row of a bucket carries the same ``applied_bid`` — ``write_state`` swaps
+    each bucket directory in with an atomic rename, so a bucket is wholly
+    old or wholly new even across a crash. A touched bucket with NO rows
+    has never committed at all, so it is unfenced."""
+    if state is None:
+        return list(touched)
+    fenced = {
+        r["bk"]
+        for r in state.select(_bucket_expr(key_cols, key_buckets).alias("bk"), "applied_bid")
+        .groupBy("bk")
+        .agg(F.min("applied_bid").alias("mb"))
+        .filter(F.col("mb") >= int(batch_id))
+        .collect()
+    }
+    return [bk for bk in touched if bk not in fenced]
+
+
 def read_state(
     spark: SparkSession, path: str, buckets: list[int] | None = None
 ) -> DataFrame | None:
@@ -224,28 +279,23 @@ def read_state(
     key-hash buckets (partition pruning: only those directories are scanned —
     the read is O(touched buckets), not O(state)).
 
-    A torn bucket swap (crash between ``publish_state_buckets``' per-bucket
-    renames) is rolled FORWARD here, under the state lock, before the read
-    plans — a direct reader would otherwise see a journaled-but-unswapped
-    bucket as never-committed state (ADVICE r8). Lock discipline (ADVICE
-    r9): if THIS process already holds the path's lock (every ingest path —
-    fold/upsert/compact — calls read_state inside its locked section), heal
-    directly under the caller's lock; re-acquiring the non-reentrant O_EXCL
-    lock would raise StateLockError against the caller's own fence. A
-    lock-free read takes the lock UNCONDITIONALLY and heals under it — the
-    former check-then-lock (``exists(journal)`` before acquiring) could run
-    before a live publish wrote its journal and then plan over a
-    half-swapped directory; now a live publish makes the read raise
-    ``StateLockError`` instead, which beats reading torn state. Residual
-    TOCTOU, by design: the lock is released before the scan executes, so a
-    publish STARTING after release can still swap buckets mid-read —
-    race-free concurrent read-while-publish needs the storage layer
-    (Delta/ACID); this file-based machinery is the local[] harness."""
-    if os.path.abspath(path) in _HELD_LOCKS:
+    A torn bucket swap (crash between ``write_state``'s per-bucket renames)
+    is rolled FORWARD here, under the state lock, before the read plans — a
+    direct reader would otherwise see a journaled-but-unswapped bucket as
+    never-committed state (ADVICE r8). Lock discipline (ADVICE r9): if the
+    calling thread already holds the path's lock (every ingest path calls
+    read_state inside its locked section), heal directly under the caller's
+    lock; re-acquiring the non-reentrant O_EXCL lock would raise
+    StateLockError against the caller's own fence. A lock-free read takes
+    the lock UNCONDITIONALLY and heals under it, so a live publish makes the
+    read raise ``StateLockError`` instead of planning over a half-swapped
+    directory. Residual TOCTOU, by design: the lock is released before the
+    scan executes, so a publish STARTING after release can still swap
+    buckets mid-read — race-free concurrent read-while-publish needs the
+    storage layer (Delta/ACID); this file-based machinery is the local[]
+    harness."""
+    with _own_lock(path):
         recover_bucket_swap(path)
-    else:
-        with _state_lock(path):
-            recover_bucket_swap(path)
     try:
         # mergeSchema: after a T4 widening, buckets written before the ALTER
         # have fewer columns than buckets written after — union their schemas
@@ -261,38 +311,69 @@ def read_state(
     return df
 
 
+_SWAP_JOURNAL = "_state_swap_journal.json"
+
+
 def write_state(
     state: DataFrame,
     path: str,
     key_buckets: int | None = None,
     key_cols: tuple[str, ...] = DEFAULT_KEY,
-    dynamic_overwrite: bool = False,
 ) -> None:
-    """Materialize merged state. ``key_buckets`` lays the table out as
-    ``__bucket=K`` partition directories keyed on ``pmod(xxhash64(key), N)``
-    — the unit of incremental rewrite. With ``dynamic_overwrite`` only the
-    partitions PRESENT in ``state`` are replaced (Spark dynamic partition
-    overwrite); untouched bucket directories are left byte-identical. On
-    Delta this whole function becomes MERGE + OPTIMIZE."""
-    if key_buckets:
+    """Materialize state. Without ``key_buckets``: a plain overwrite of the
+    whole table. With ``key_buckets``: the crash-atomic bucket publish — the
+    table is laid out as ``__bucket=K`` partition directories keyed on
+    ``pmod(xxhash64(key), N)`` (the unit of incremental rewrite), and ONLY
+    the buckets present in ``state`` are replaced; every other bucket
+    directory is left byte-identical. On Delta this becomes MERGE + OPTIMIZE.
+
+    Protocol (same journal discipline as ``layout.optimize_clustered``;
+    the ReplacingMergeTree part swap, per bucket): (1) write the buckets'
+    COMPLETE new state to a sibling staging dir; (2) fsync-publish a journal
+    naming the staged bucket dirs; (3) swap each bucket directory in with
+    rmtree+rename — rename is atomic, so every bucket is either wholly old
+    or wholly new at all times; (4) clear the journal and staging dir. A
+    crash in (1) leaves an orphan staging dir and the old state intact; a
+    crash in (3) is rolled forward by ``recover_bucket_swap`` (which
+    ``read_state`` runs), so a replayed batch always merges into committed
+    state, never into an emptied bucket. Runs under the path's state lock,
+    reusing it if the calling thread already holds it."""
+    if not key_buckets:
+        state.write.mode("overwrite").parquet(path)
+        return
+    staged_root = f"{os.path.abspath(path)}.staged"
+    with _own_lock(path):
+        recover_bucket_swap(path)  # a torn earlier swap lands before this one
         out = state.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets))
         # keyed repartition → each bucket lands in one task → one file/bucket
-        out = out.repartition(F.col(BUCKET_COL))
         (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic" if dynamic_overwrite else "static")
+            out.repartition(F.col(BUCKET_COL))
+            .write.mode("overwrite")
             .partitionBy(BUCKET_COL)
-            .parquet(path)
+            .parquet(staged_root)
         )
-    else:
-        state.write.mode("overwrite").parquet(path)
-
-
-_SWAP_JOURNAL = "_state_swap_journal.json"
+        bucket_dirs = sorted(
+            d for d in os.listdir(staged_root) if d.startswith(f"{BUCKET_COL}=")
+        )
+        os.makedirs(path, exist_ok=True)
+        journal = os.path.join(path, _SWAP_JOURNAL)
+        tmp_journal = journal + ".tmp"
+        with open(tmp_journal, "w") as fh:
+            json.dump({"buckets": bucket_dirs, "staged": staged_root}, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp_journal, journal)
+        for bucket_dir in bucket_dirs:
+            dst = os.path.join(path, bucket_dir)
+            if os.path.isdir(dst):
+                shutil.rmtree(dst)
+            os.rename(os.path.join(staged_root, bucket_dir), dst)
+        os.remove(journal)
+        shutil.rmtree(staged_root, ignore_errors=True)
 
 
 def recover_bucket_swap(path: str) -> bool:
-    """Finish a ``publish_state_buckets`` swap interrupted by a crash.
+    """Finish a ``write_state`` bucket swap interrupted by a crash.
 
     The journal is written only AFTER the staged write is complete, so
     recovery always rolls FORWARD: any journaled bucket still present in
@@ -300,11 +381,7 @@ def recover_bucket_swap(path: str) -> bool:
     rename is atomic per bucket); buckets already swapped are skipped.
     Returns True if a torn swap was healed. Callers must hold the state
     lock. An orphan staging dir with NO journal (crash mid-staged-write)
-    is deleted — the old state is intact and the batch replays through
-    the per-bucket fence."""
-    import json
-    import shutil
-
+    is deleted — the old state is intact and the batch replays."""
     journal = os.path.join(path, _SWAP_JOURNAL)
     staged_root = f"{os.path.abspath(path)}.staged"
     if not os.path.exists(journal):
@@ -323,62 +400,6 @@ def recover_bucket_swap(path: str) -> bool:
     os.remove(journal)
     shutil.rmtree(entry["staged"], ignore_errors=True)
     return True
-
-
-def publish_state_buckets(
-    state: DataFrame,
-    path: str,
-    key_buckets: int,
-    key_cols: tuple[str, ...] = DEFAULT_KEY,
-) -> None:
-    """Crash-atomic per-bucket publish — the replacement for a raw dynamic
-    partition overwrite wherever a replay fence reads ``applied_bid`` back
-    from the table (ADVICE r7: Spark's multi-bucket dynamic overwrite is not
-    atomic even WITHIN a bucket — a crash mid job-commit can leave one bucket
-    dir holding a mix of old- and new-batch files, and min(applied_bid)
-    then re-applies the batch to rows already folded, a double-fold; the
-    delete-then-rename window can even leave a bucket EMPTY, which a fence
-    reads as never-committed and silently drops the bucket's history).
-
-    Protocol (same journal discipline as ``layout.optimize_clustered``):
-    (1) write the touched buckets' COMPLETE new state to a sibling staging
-    dir; (2) fsync-publish a journal naming the staged bucket dirs; (3) swap
-    each bucket directory in with rmtree+rename (rename is atomic, so every
-    bucket is either wholly old or wholly new at all times); (4) clear the
-    journal and staging dir. A crash in (1) leaves an orphan staging dir and
-    the old state intact; a crash in (3) is rolled forward by
-    ``recover_bucket_swap``. Callers must hold the state lock."""
-    import json
-    import shutil
-
-    staged_root = f"{os.path.abspath(path)}.staged"
-    if os.path.isdir(staged_root):
-        shutil.rmtree(staged_root)
-    out = state.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets))
-    (
-        out.repartition(F.col(BUCKET_COL))
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(staged_root)
-    )
-    bucket_dirs = sorted(
-        d for d in os.listdir(staged_root) if d.startswith(f"{BUCKET_COL}=")
-    )
-    os.makedirs(path, exist_ok=True)
-    journal = os.path.join(path, _SWAP_JOURNAL)
-    tmp_journal = journal + ".tmp"
-    with open(tmp_journal, "w") as fh:
-        json.dump({"buckets": bucket_dirs, "staged": staged_root}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp_journal, journal)
-    for bucket_dir in bucket_dirs:
-        dst = os.path.join(path, bucket_dir)
-        if os.path.isdir(dst):
-            shutil.rmtree(dst)
-        os.rename(os.path.join(staged_root, bucket_dir), dst)
-    os.remove(journal)
-    shutil.rmtree(staged_root, ignore_errors=True)
 
 
 def upsert_changes_bucketed(
@@ -401,27 +422,27 @@ def upsert_changes_bucketed(
     Steps: (1) bucket the batch keys and collect the distinct bucket ids —
     driver-side but bounded by ``key_buckets``, never by data; (2) read ONLY
     those bucket partitions (partition-pruned scan); (3) localCheckpoint the
-    pruned state so the subsequent overwrite does not read from the path it
-    writes (and to cut the plan lineage); (4) arg-max merge; (5) dynamic
-    partition overwrite of exactly the touched buckets.
+    pruned state so the subsequent publish does not read from the path it
+    writes (and to cut the plan lineage); (4) arg-max merge; (5) the
+    journaled bucket swap of ``write_state`` publishes exactly the touched
+    buckets, crash-atomically: a replayed batch after a crash at any step
+    merges into committed state again, and the arg-max makes that a no-op
+    for changes already applied.
 
     Returns the touched bucket ids (for tests/observability).
 
     Raises ``StateLockError`` if another upsert/compact holds the path's
     lock (see ``_state_lock``).
     """
-    upd = updates.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets))
-    touched = sorted(
-        r[0] for r in upd.select(BUCKET_COL).distinct().collect()
-    )
+    touched = _touched_buckets(updates, key_cols, key_buckets)
     if not touched:
         return []
     with _state_lock(path):
         state = read_state(spark, path, buckets=touched)
         if state is not None:
             state = state.localCheckpoint(eager=True)
-        merged = apply_changes(state, upd.drop(BUCKET_COL), key_cols, version_cols)
-        write_state(merged, path, key_buckets=key_buckets, key_cols=key_cols, dynamic_overwrite=True)
+        merged = apply_changes(state, updates, key_cols, version_cols)
+        write_state(merged, path, key_buckets=key_buckets, key_cols=key_cols)
     return touched
 
 
@@ -445,14 +466,17 @@ def compact_state(
     complete copy, so a crash at any point leaves either the old or the new
     state recoverable on disk. On Delta this maps to OPTIMIZE + ZORDER, is
     ACID, and needs no coordination."""
-    import shutil
-
     with _state_lock(path):
         state = read_state(spark, path)
         if state is None:
             return
         tmp = f"{path}.compact-tmp"
         old = f"{path}.compact-old"
+        # the bucket publish keeps buckets it does not rewrite, so a crashed
+        # compaction's leftover must not seed this one with stale buckets;
+        # its lock can only be a crashed compaction's (we hold path's lock)
+        shutil.rmtree(tmp, ignore_errors=True)
+        break_state_lock(tmp, force=True)
         write_state(state.localCheckpoint(eager=True), tmp, key_buckets=key_buckets)
         shutil.rmtree(old, ignore_errors=True)
         os.rename(path, old)

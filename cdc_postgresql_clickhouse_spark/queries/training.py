@@ -1406,7 +1406,10 @@ def sketch_bloom_error_sweep(
         .distinct()
     )
     for prev, m in zip(m_desc, m_desc[1:]):
-        assert prev % m == 0, "sweep arms must chain by divisibility"
+        if prev % m:
+            raise ValueError(
+                f"BLOOM_SWEEP_M arms must chain by divisibility: {prev} % {m} != 0"
+            )
         bits_by_m[m] = bits_by_m[prev].select((F.col("pos") % m).alias("pos")).distinct()
     flagged = probe_g.select(
         *[

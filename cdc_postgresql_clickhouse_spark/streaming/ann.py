@@ -98,25 +98,15 @@ def run_incremental_ivf(
 ) -> None:
     """Drain ``src_dir`` (parquet files of vec_id, embedding) through the
     incremental IVF ingest with an availableNow trigger."""
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
+    from cdc_postgresql_clickhouse_spark.streaming.sketch import _drain
 
-    def handle(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_batch_ivf(batch.sparkSession, batch, assign_path, n_centroids)
-
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark,
+        src_dir,
+        lambda b, _i: ingest_batch_ivf(b.sparkSession, b, assign_path, n_centroids),
+        checkpoint_dir,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
 def compact_assignments(spark: SparkSession, assign_path: str, files_per_cid: int = 1) -> None:
@@ -216,25 +206,15 @@ def run_incremental_pq(
 ) -> None:
     """Drain ``src_dir`` (parquet files of vec_id, embedding) through the
     incremental PQ ingest with an availableNow trigger."""
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
+    from cdc_postgresql_clickhouse_spark.streaming.sketch import _drain
 
-    def handle(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_batch_pq(batch.sparkSession, batch, code_path)
-
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark,
+        src_dir,
+        lambda b, _i: ingest_batch_pq(b.sparkSession, b, code_path),
+        checkpoint_dir,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
 # --- Incremental SemDeDup state maintenance — round 13 --------------------------
@@ -375,22 +355,12 @@ def run_incremental_semdedup(
 ) -> None:
     """Drain ``src_dir`` (parquet files of vec_id, e) through the
     incremental SemDeDup ingest with an availableNow trigger."""
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
+    from cdc_postgresql_clickhouse_spark.streaming.sketch import _drain
 
-    def handle(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_batch_semdedup(batch.sparkSession, batch, state_path, n_centroids)
-
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark,
+        src_dir,
+        lambda b, _i: ingest_batch_semdedup(b.sparkSession, b, state_path, n_centroids),
+        checkpoint_dir,
+        max_files_per_trigger,
     )
-    q.awaitTermination()

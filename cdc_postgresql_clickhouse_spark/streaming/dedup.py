@@ -20,7 +20,8 @@ executor memory. Each micro-batch:
    version contest with doc_id as the version; a dethroned prior canonical
    is logged as a duplicate at that moment),
 5. appends newly detected duplicates to the dup log,
-6. dynamically overwrites exactly the touched buckets.
+6. publishes exactly the touched buckets through ``write_state``'s
+   crash-atomic journaled bucket swap.
 
 Per-batch work is O(touched buckets + batch), not O(corpus). Replay safety:
 canonical assignments are stable under batch replay (the existing keep wins
@@ -41,9 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_postgresql_clickhouse_spark.operators.state import (
-    BUCKET_COL,
-    _bucket_expr,
     _state_lock,
+    _touched_buckets,
     read_state,
     write_state,
 )
@@ -69,14 +69,13 @@ def ingest_batch(
     union of all batches — the incremental-vs-batch equivalence the
     registered oracle checks."""
     fp = batch.select(F.md5("text").alias("content_hash"), F.col("doc_id").cast("long"))
-    fpb = fp.withColumn(BUCKET_COL, _bucket_expr(("content_hash",), key_buckets))
-    touched = sorted(r[0] for r in fpb.select(BUCKET_COL).distinct().collect())
+    touched = _touched_buckets(fp, ("content_hash",), key_buckets)
     if not touched:
         return
     with _state_lock(state_path):
         state = read_state(spark, state_path, buckets=touched)
         if state is not None:
-            # localCheckpoint: the overwrite below must not read its own input
+            # localCheckpoint: the publish below must not read its own input
             state = state.select(
                 "content_hash",
                 F.col("keep_doc").alias("state_keep"),
@@ -95,7 +94,7 @@ def ingest_batch(
             )
         else:
             # full outer: state rows whose hash is absent from the batch
-            # still live in the overwritten buckets and must be carried over
+            # still live in the republished buckets and must be carried over
             merged = batch_agg.join(state, "content_hash", "full_outer").select(
                 "content_hash",
                 F.least(
@@ -127,7 +126,6 @@ def ingest_batch(
             state_path,
             key_buckets=key_buckets,
             key_cols=("content_hash",),
-            dynamic_overwrite=True,
         )
 
 
@@ -230,8 +228,7 @@ def ingest_batch_minhash(
 
     # --- probe + merge the inverted index (bands_state) -------------------
     bkey = ("band", "bh")
-    bands_b = bands.withColumn(BUCKET_COL, _bucket_expr(bkey, key_buckets))
-    touched = sorted(r[0] for r in bands_b.select(BUCKET_COL).distinct().collect())
+    touched = _touched_buckets(bands, bkey, key_buckets)
     if not touched:
         return
     with _state_lock(bands_state_path):
@@ -267,7 +264,6 @@ def ingest_batch_minhash(
             bands_state_path,
             key_buckets=key_buckets,
             key_cols=bkey,
-            dynamic_overwrite=True,
         )
 
     # --- verify candidates against the shingle store (docs_state) ---------
@@ -275,12 +271,7 @@ def ingest_batch_minhash(
         partners = cand.select(F.col("doc_a").alias("doc_id")).unionByName(
             cand.select(F.col("doc_b").alias("doc_id"))
         ).distinct()
-        pbuckets = sorted(
-            r[0]
-            for r in partners.select(
-                _bucket_expr(("doc_id",), key_buckets).alias("b")
-            ).distinct().collect()
-        )
+        pbuckets = _touched_buckets(partners, ("doc_id",), key_buckets)
         store = read_state(spark, docs_state_path, buckets=pbuckets or None)
         # shingle lookup: batch docs first (fresher), state for older partners
         lookup = shs if store is None else shs.unionByName(store).dropDuplicates(["doc_id"])
@@ -288,12 +279,7 @@ def ingest_batch_minhash(
         _verified_pairs(cand, lookup, lookup, threshold).write.mode("append").parquet(
             pair_log_path
         )
-        sbuckets = sorted(
-            r[0]
-            for r in shs.select(
-                _bucket_expr(("doc_id",), key_buckets).alias("b")
-            ).distinct().collect()
-        )
+        sbuckets = _touched_buckets(shs, ("doc_id",), key_buckets)
         own = read_state(spark, docs_state_path, buckets=sbuckets)
         merged_store = shs if own is None else own.localCheckpoint(eager=True).unionByName(shs)
         write_state(
@@ -301,7 +287,6 @@ def ingest_batch_minhash(
             docs_state_path,
             key_buckets=key_buckets,
             key_cols=("doc_id",),
-            dynamic_overwrite=True,
         )
 
 

@@ -15,22 +15,22 @@ fold state):
   accumulator (fold associativity over ordered concatenation: the
   composed fold is literally the batch fold's op sequence, so the result
   is bit-identical to a one-shot fold of the whole history), and
-  publishes exactly the touched buckets via the journaled atomic
-  bucket swap (``publish_state_buckets`` — rename per bucket, so a
-  bucket is never half-old/half-new even across a crash).
+  publishes exactly the touched buckets through ``write_state``'s
+  journaled bucket swap (rename per bucket, so a bucket is never
+  half-old/half-new, and a swap torn by a crash is rolled forward by the
+  next ``read_state``).
 - exactly-once: foreachBatch replays deliver the SAME batch id, so every
-  state row carries ``applied_bid`` and the ingest FENCES PER BUCKET —
-  the batch is applied only to touched buckets whose recorded id is
-  behind the incoming one. A single max-fence over all touched buckets
-  would not survive a crash mid-commit: Spark's multi-bucket dynamic
-  partition overwrite is not atomic, so some buckets can land at batch N
-  while others stay at N-1, and a whole-batch skip on max==N would then
-  lose the laggard buckets' events forever. Folds are independent per
-  key (hence per bucket), so applying the replayed batch to ONLY the
-  laggard buckets is exact; buckets already at N are left untouched.
-  This is the standard idempotent-sink recipe for non-idempotent merges
-  (Structured Streaming programming guide, foreachBatch exactly-once
-  section), made partial-commit-safe.
+  state row carries ``applied_bid`` and the ingest FENCES PER BUCKET
+  (``_unfenced_buckets_keyed``) — the batch is applied only to touched
+  buckets whose recorded id is behind the incoming one. A crash after
+  some bucket renames leaves buckets at mixed batch ids (each bucket
+  whole), so a single max-fence over all touched buckets would skip the
+  replay and lose the laggard buckets' events forever. Folds are
+  independent per key (hence per bucket), so applying the replayed batch
+  to ONLY the laggard buckets is exact; buckets already at the incoming
+  batch id are left untouched. This is the standard idempotent-sink recipe for
+  non-idempotent merges (Structured Streaming programming guide,
+  foreachBatch exactly-once section), made partial-commit-safe.
 - ORDERED-ARRIVAL CONTRACT: a fold consumes its stream in order, so every
   batch row's (us, eid) must exceed the state's (last_us, last_eid) for
   its key — the contract a time-partitioned source (Kafka per-key order,
@@ -49,29 +49,16 @@ from pyspark.sql import functions as F
 from cdc_postgresql_clickhouse_spark.operators.state import (
     _bucket_expr,
     _state_lock,
-    publish_state_buckets,
+    _touched_buckets,
+    _unfenced_buckets_keyed,
     read_state,
-    recover_bucket_swap,
+    write_state,
 )
 
 FOLD_BUCKETS = 8
 _STATE_COLS = (
     "user_id", "n_events", "last_us", "last_eid", "last_c", "acc", "applied_bid"
 )
-
-
-def _unfenced_buckets(
-    state, touched: list[int], batch_id: int, key_buckets: int
-) -> list[int]:
-    """The touched buckets whose state is still behind ``batch_id`` — the
-    per-bucket replay fence. Every row of a bucket carries the same
-    ``applied_bid``: the publish path swaps each bucket directory in with
-    an atomic rename (``publish_state_buckets``), so a bucket is wholly old
-    or wholly new even across a crash (ADVICE r7 — a raw dynamic partition
-    overwrite could tear WITHIN a bucket, and min(applied_bid) would then
-    double-fold the already-committed rows). A touched bucket with NO rows
-    has never committed at all, so it is unfenced."""
-    return _unfenced_buckets_keyed(state, touched, batch_id, key_buckets, ("user_id",))
 
 
 def _ewma_step(acc, s):
@@ -88,21 +75,17 @@ def ingest_batch_ewma(
 ) -> None:
     """Fold one micro-batch of (user_id, us, eid, c) rows into the state."""
     b = batch.select("user_id", "us", "eid", "c")
-    touched = sorted(
-        r[0]
-        for r in b.select(_bucket_expr(("user_id",), key_buckets).alias("bk"))
-        .distinct()
-        .collect()
-    )
+    touched = _touched_buckets(b, ("user_id",), key_buckets)
     if not touched:
         return
     with _state_lock(state_path):
-        recover_bucket_swap(state_path)
         state = read_state(spark, state_path, buckets=touched)
         if state is not None:
             # eager: the bucket swap below must never read its input
             state = state.select(*_STATE_COLS).localCheckpoint(eager=True)
-        unfenced = _unfenced_buckets(state, touched, batch_id, key_buckets)
+        unfenced = _unfenced_buckets_keyed(
+            state, touched, batch_id, key_buckets, ("user_id",)
+        )
         if not unfenced:
             return  # at-least-once replay: every touched bucket committed
         if len(unfenced) < len(touched):
@@ -112,9 +95,7 @@ def ingest_batch_ewma(
             if state is not None:
                 # an empty filtered state joins like no state at all (the
                 # fold's null-acc branch), so no special-casing needed
-                state = state.filter(
-                    _bucket_expr(("user_id",), key_buckets).isin(unfenced)
-                ).localCheckpoint(eager=True)
+                state = state.filter(bexpr.isin(unfenced)).localCheckpoint(eager=True)
         arr = b.groupBy("user_id").agg(
             F.sort_array(
                 F.collect_list(F.struct("us", "eid", "c"))
@@ -158,22 +139,14 @@ def ingest_batch_ewma(
             new_acc.alias("acc"),
             F.lit(int(batch_id)).cast("long").alias("applied_bid"),
         )
-        publish_state_buckets(
+        write_state(
             out, state_path, key_buckets=key_buckets, key_cols=("user_id",)
         )
 
 
-def _heal_then_read(spark: SparkSession, state_path: str) -> DataFrame | None:
-    """Reader-side recovery seam. The healing itself now lives in
-    ``read_state`` (journal check + roll-forward under the state lock,
-    unconditionally — the former check-then-lock here could miss a publish
-    that started between the unlocked check and the read, ADVICE r8)."""
-    return read_state(spark, state_path)
-
-
 def read_ewma(spark: SparkSession, state_path: str) -> DataFrame | None:
     """The maintained fold state, in the batch row's output shape."""
-    st = _heal_then_read(spark, state_path)
+    st = read_state(spark, state_path)
     if st is None:
         return None
     return st.select(
@@ -208,7 +181,7 @@ def run_incremental_ewma(
 # --- second fold instance: capped sessionization -----------------------------
 #
 # The same ingest recipe (touched-bucket read, batch-id fence, continue
-# the fold from stored state, dynamic bucket overwrite) applied to the
+# the fold from stored state, journaled bucket swap) applied to the
 # ALL-INTEGER session-counting fold of
 # ``queries/events.py::events_sessionize_capped`` — demonstrating the
 # sink pattern is not EWMA-specific: any left fold whose per-key state
@@ -232,29 +205,23 @@ def ingest_batch_sessions(
     from cdc_postgresql_clickhouse_spark.queries.events import SESS_CAP_S, SESS_GAP_S
 
     b = batch.select("user_id", "es", "eid")
-    touched = sorted(
-        r[0]
-        for r in b.select(_bucket_expr(("user_id",), key_buckets).alias("bk"))
-        .distinct()
-        .collect()
-    )
+    touched = _touched_buckets(b, ("user_id",), key_buckets)
     if not touched:
         return
     with _state_lock(state_path):
-        recover_bucket_swap(state_path)
         state = read_state(spark, state_path, buckets=touched)
         if state is not None:
             state = state.select(*_SESS_STATE_COLS).localCheckpoint(eager=True)
-        unfenced = _unfenced_buckets(state, touched, batch_id, key_buckets)
+        unfenced = _unfenced_buckets_keyed(
+            state, touched, batch_id, key_buckets, ("user_id",)
+        )
         if not unfenced:
             return  # at-least-once replay: every touched bucket committed
         if len(unfenced) < len(touched):
             bexpr = _bucket_expr(("user_id",), key_buckets)
             b = b.filter(bexpr.isin(unfenced))
             if state is not None:
-                state = state.filter(
-                    _bucket_expr(("user_id",), key_buckets).isin(unfenced)
-                ).localCheckpoint(eager=True)
+                state = state.filter(bexpr.isin(unfenced)).localCheckpoint(eager=True)
         arr = b.groupBy("user_id").agg(
             F.sort_array(F.collect_list(F.struct("es", "eid"))).alias("a")
         )
@@ -307,14 +274,14 @@ def ingest_batch_sessions(
             F.element_at(folded, 4).cast("long").alias("n_gap"),
             F.lit(int(batch_id)).cast("long").alias("applied_bid"),
         )
-        publish_state_buckets(
+        write_state(
             out, state_path, key_buckets=key_buckets, key_cols=("user_id",)
         )
 
 
 def read_sessions(spark: SparkSession, state_path: str) -> DataFrame | None:
     """The maintained session counts, in the batch row's output shape."""
-    st = _heal_then_read(spark, state_path)
+    st = read_state(spark, state_path)
     if st is None:
         return None
     return st.select(
@@ -385,12 +352,7 @@ def ingest_batch_cusum(
     missing = seen - set(calib)
     if missing:
         raise ValueError(f"CUSUM ingest: keys without calibration: {sorted(missing)}")
-    touched = sorted(
-        r[0]
-        for r in b.select(_bucket_expr(("k",), key_buckets).alias("bk"))
-        .distinct()
-        .collect()
-    )
+    touched = _touched_buckets(b, ("k",), key_buckets)
     if not touched:
         return
     tgt_map = F.create_map(
@@ -400,7 +362,6 @@ def ingest_batch_cusum(
         *[F.lit(x) for kv in calib.items() for x in (kv[0], int(kv[1][1]))]
     )
     with _state_lock(state_path):
-        recover_bucket_swap(state_path)
         state = read_state(spark, state_path, buckets=touched)
         if state is not None:
             state = state.select(*_CUSUM_STATE_COLS).localCheckpoint(eager=True)
@@ -413,9 +374,7 @@ def ingest_batch_cusum(
             bexpr = _bucket_expr(("k",), key_buckets)
             b = b.filter(bexpr.isin(unfenced))
             if state is not None:
-                state = state.filter(
-                    _bucket_expr(("k",), key_buckets).isin(unfenced)
-                ).localCheckpoint(eager=True)
+                state = state.filter(bexpr.isin(unfenced)).localCheckpoint(eager=True)
         arr = b.groupBy("k").agg(
             F.sort_array(F.collect_list(F.struct("es", "eid", "c"))).alias("a")
         )
@@ -482,35 +441,14 @@ def ingest_batch_cusum(
             F.element_at(folded, 4).cast("long").alias("max_s"),
             F.lit(int(batch_id)).cast("long").alias("applied_bid"),
         )
-        publish_state_buckets(
+        write_state(
             out, state_path, key_buckets=key_buckets, key_cols=("k",)
         )
 
 
-def _unfenced_buckets_keyed(
-    state, touched: list[int], batch_id: int, key_buckets: int,
-    key_cols: tuple[str, ...],
-) -> list[int]:
-    """``_unfenced_buckets`` for an arbitrary key column set (the original
-    is pinned to user_id-keyed folds)."""
-    if state is None:
-        return list(touched)
-    fenced = {
-        r["bk"]
-        for r in state.select(
-            _bucket_expr(key_cols, key_buckets).alias("bk"), "applied_bid"
-        )
-        .groupBy("bk")
-        .agg(F.min("applied_bid").alias("mb"))
-        .filter(F.col("mb") >= int(batch_id))
-        .collect()
-    }
-    return [bk for bk in touched if bk not in fenced]
-
-
 def read_cusum(spark: SparkSession, state_path: str) -> DataFrame | None:
     """The maintained CUSUM state, in the batch report's output shape."""
-    st = _heal_then_read(spark, state_path)
+    st = read_state(spark, state_path)
     if st is None:
         return None
     return st.select(
@@ -567,16 +505,10 @@ def ingest_batch_first_seen(
 ) -> None:
     """Fold one micro-batch of (user_id, us) rows into the first-seen state."""
     b = batch.select("user_id", "us")
-    touched = sorted(
-        r[0]
-        for r in b.select(_bucket_expr(("user_id",), key_buckets).alias("bk"))
-        .distinct()
-        .collect()
-    )
+    touched = _touched_buckets(b, ("user_id",), key_buckets)
     if not touched:
         return
     with _state_lock(state_path):
-        recover_bucket_swap(state_path)
         state = read_state(spark, state_path, buckets=touched)
         if state is not None:
             state = state.select(*_FIRST_STATE_COLS).localCheckpoint(eager=True)
@@ -589,9 +521,7 @@ def ingest_batch_first_seen(
             bexpr = _bucket_expr(("user_id",), key_buckets)
             b = b.filter(bexpr.isin(unfenced))
             if state is not None:
-                state = state.filter(
-                    _bucket_expr(("user_id",), key_buckets).isin(unfenced)
-                ).localCheckpoint(eager=True)
+                state = state.filter(bexpr.isin(unfenced)).localCheckpoint(eager=True)
         agg = b.groupBy("user_id").agg(
             F.count(F.lit(1)).cast("long").alias("bn"),
             F.min("us").cast("long").alias("bmin"),
@@ -615,14 +545,14 @@ def ingest_batch_first_seen(
             ).cast("long").alias("first_us"),
             F.lit(int(batch_id)).cast("long").alias("applied_bid"),
         )
-        publish_state_buckets(
+        write_state(
             out, state_path, key_buckets=key_buckets, key_cols=("user_id",)
         )
 
 
 def read_first_seen(spark: SparkSession, state_path: str) -> DataFrame | None:
     """The maintained first-seen registry: (user_id, n_events, first_us)."""
-    st = _heal_then_read(spark, state_path)
+    st = read_state(spark, state_path)
     if st is None:
         return None
     return st.select("user_id", "n_events", "first_us")

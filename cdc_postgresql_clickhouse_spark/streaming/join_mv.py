@@ -44,8 +44,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_postgresql_clickhouse_spark.operators.state import (
-    _bucket_expr,
     _state_lock,
+    _touched_buckets,
+    _unfenced_buckets_keyed,
     read_state,
     write_state,
 )
@@ -95,12 +96,7 @@ def ingest_batch_join_mv(
     import os
 
     b = batch.select("user_id", "us", "eid", "event_type", "cents")
-    touched = sorted(
-        r[0]
-        for r in b.select(_bucket_expr(("user_id",), key_buckets).alias("bk"))
-        .distinct()
-        .collect()
-    )
+    touched = _touched_buckets(b, ("user_id",), key_buckets)
     if not touched:
         return
     keys_path = os.path.join(state_path, "keys")
@@ -114,21 +110,15 @@ def ingest_batch_join_mv(
         prior = read_state(spark, keys_path, buckets=touched)
         if prior is not None:
             prior = prior.select(*_KEY_COLS).localCheckpoint(eager=True)
-            bucket_bids = dict(
-                prior.select(
-                    _bucket_expr(("user_id",), key_buckets).alias("bk"),
-                    "applied_bid",
-                )
-                .groupBy("bk")
-                .agg(F.min("applied_bid").alias("mb"))
-                .collect()
-            )
-            if int(batch_id) <= mv_bid and all(
-                bucket_bids.get(bk) is not None
-                and int(batch_id) <= int(bucket_bids[bk])
-                for bk in touched
-            ):
-                return  # replay of a FULLY committed batch: nothing to redo
+        # replay of a FULLY committed batch is a no-op: the MV covers it and
+        # every touched key bucket is fenced (a touched bucket with no rows
+        # has not committed); a partially committed key write re-applies
+        # idempotently below
+        if int(batch_id) <= mv_bid and not _unfenced_buckets_keyed(
+            prior, touched, batch_id, key_buckets, ("user_id",)
+        ):
+            return
+        if prior is not None:
             p = prior.select(
                 "user_id",
                 F.col("a_us").alias("p_a_us"), F.col("a_eid").alias("p_a_eid"),
@@ -237,7 +227,6 @@ def ingest_batch_join_mv(
             keys_path,
             key_buckets=key_buckets,
             key_cols=("user_id",),
-            dynamic_overwrite=True,
         )
 
 

@@ -16,22 +16,29 @@ plan (survey §3.1):
   makes the file/Kafka source exactly-once into the sink; the version
   arg-max additionally makes any replay a no-op (S10) — strictly stronger
   than the reference's at-least-once.
+- Commit: each batch publishes its touched key-hash buckets through the
+  journaled bucket swap of ``operators.state.write_state`` — every bucket
+  is wholly old or wholly new, as a ReplacingMergeTree part swap is. A
+  crash at any step leaves the committed state recoverable (a torn swap is
+  rolled forward by the next ``read_state``), and the replayed batch merges
+  into it idempotently.
 - Stateless incremental view maintenance (ST1): the transform has no
   aggregation, so Spark keeps **no** streaming state; per-key state lives in
   the state table itself (ST3), the 100 TB posture.
 
-Read-after-write caveat: dirty bucket partitions of the state path are
-rewritten per batch (dynamic partition overwrite), so a *lazy* DataFrame
-previously read from it becomes invalid once a new batch touches the same
-buckets — re-read the path after updates. On Delta the overwrite is replaced
-by ACID ``MERGE INTO`` and snapshot isolation removes the caveat; this
-mirrors ClickHouse where un-FINAL reads race background merges.
+Read-after-write caveat: dirty bucket directories of the state path are
+replaced per batch, so a *lazy* DataFrame previously read from it becomes
+invalid once a new batch touches the same buckets — re-read the path after
+updates. On Delta the swap is replaced by ACID ``MERGE INTO`` and snapshot
+isolation removes the caveat; this mirrors ClickHouse where un-FINAL reads
+race background merges.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from cdc_postgresql_clickhouse_spark.operators.cdc_transform import changes_to_state_updates
 from cdc_postgresql_clickhouse_spark.operators.state import upsert_changes_bucketed
@@ -52,12 +59,14 @@ def run_cdc_pipeline(
     max_files_per_trigger: int | None = None,
     envelope_schema=None,
     extra_image_columns: tuple[str, ...] = (),
-) -> None:
+) -> StreamingQuery:
     """Run the end-to-end CDC pipeline over a directory of envelope JSON files.
 
     ``available_now=True`` drains everything and stops (test/backfill mode);
     otherwise a continuous 500 ms-triggered query is started and the caller
-    owns its lifecycle.
+    owns its lifecycle. Either way the ``StreamingQuery`` is returned, so
+    the caller can read its progress, ``processAllAvailable()`` or
+    ``stop()`` it.
 
     ``dlq_path``: when set, records that parse to no op code (malformed or
     non-envelope JSON) are appended there with the whole-record JSON
@@ -70,9 +79,11 @@ def run_cdc_pipeline(
     ``key_buckets``: the state table is laid out as key-hash bucket
     partitions and each micro-batch rewrites ONLY the buckets containing
     that batch's keys — per-batch work is O(touched buckets + batch), not
-    O(state). Size it so a bucket ~ an executor-comfortable rewrite unit
-    (at 100 TB state: thousands of buckets). On Delta the bucket machinery
-    is replaced by ``MERGE INTO`` (ACID, no swap needed).
+    O(state). The rewritten buckets are published with the crash-atomic
+    journaled bucket swap (``operators.state.write_state``). Size it so a
+    bucket ~ an executor-comfortable rewrite unit (at 100 TB state:
+    thousands of buckets). On Delta the bucket machinery is replaced by
+    ``MERGE INTO`` (ACID, no swap needed).
 
     ``envelope_schema`` / ``extra_image_columns``: T4 schema evolution. A
     streaming source's schema is fixed at query start (as is Debezium's
@@ -119,5 +130,5 @@ def run_cdc_pipeline(
     if available_now:
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-    else:
-        writer.trigger(processingTime=trigger_processing_time or "500 milliseconds").start()
+        return q
+    return writer.trigger(processingTime=trigger_processing_time or "500 milliseconds").start()

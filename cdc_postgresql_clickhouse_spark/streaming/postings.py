@@ -81,25 +81,15 @@ def run_incremental_postings(
 ) -> None:
     """Drain ``src_dir`` (parquet files of doc_id, text) through the
     incremental posting-list ingest with an availableNow trigger."""
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
+    from cdc_postgresql_clickhouse_spark.streaming.sketch import _drain
 
-    def handle(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_batch_postings(batch, postings_path)
-
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark,
+        src_dir,
+        lambda b, _i: ingest_batch_postings(b, postings_path),
+        checkpoint_dir,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
 def compact_postings(spark: SparkSession, postings_path: str, files_per_shard: int = 1) -> None:

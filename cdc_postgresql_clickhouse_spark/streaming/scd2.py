@@ -15,7 +15,9 @@ upsert and ``streaming/dedup.py``):
   lossless re-encoding), union the batch, DISTINCT for at-least-once
   replay tolerance (a replayed change row is identical in every column),
   recompute the per-key interval chain with one lead() window, and
-  dynamically overwrite exactly the touched buckets.
+  publish exactly the touched buckets through ``write_state``'s
+  crash-atomic journaled bucket swap (a replay after a crash re-merges
+  into committed state; the DISTINCT makes that a no-op).
 - LATE/OUT-OF-ORDER data is handled by construction: the chain recompute
   splices a late change into the middle of its key's timeline and closes /
   reopens the neighboring intervals — the case an append-only SCD2 sink
@@ -34,8 +36,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdc_postgresql_clickhouse_spark.operators.state import (
-    _bucket_expr,
     _state_lock,
+    _touched_buckets,
     read_state,
     write_state,
 )
@@ -69,19 +71,14 @@ def ingest_batch_scd2(
 ) -> None:
     """Splice one micro-batch of change rows into the SCD2 state."""
     b = batch.select(*_RAW_COLS)
-    touched = sorted(
-        r[0]
-        for r in b.select(_bucket_expr(("user_id",), key_buckets).alias("bk"))
-        .distinct()
-        .collect()
-    )
+    touched = _touched_buckets(b, ("user_id",), key_buckets)
     if not touched:
         return
     with _state_lock(state_path):
         state = read_state(spark, state_path, buckets=touched)
         if state is not None:
             # intervals -> raw rows (lossless: valid_from_es is the es);
-            # localCheckpoint so the bucket overwrite below never reads its
+            # localCheckpoint so the bucket publish below never reads its
             # own input files
             prior = state.select(
                 "user_id",
@@ -100,7 +97,6 @@ def ingest_batch_scd2(
             state_path,
             key_buckets=key_buckets,
             key_cols=("user_id",),
-            dynamic_overwrite=True,
         )
 
 

@@ -57,7 +57,8 @@ def read_hll_registers(spark: SparkSession, state_path: str) -> DataFrame:
 
 
 def _drain(spark, src_dir, handle, checkpoint_dir, max_files_per_trigger):
-    """Shared availableNow micro-batch drain for the sketch ingests. The
+    """Shared availableNow micro-batch drain for the parquet-source
+    ingests (sketches, folds, MVs, SCD2, postings, IVF/PQ, SemDeDup). The
     handle receives (batch, batch_id): max- and set-merged sketches ignore
     the id (their merges are idempotent by algebra), the sum-merged CMS
     stamps it so the read-time merge can drop at-least-once re-appends."""

@@ -1,23 +1,32 @@
 """Crash-window recovery laws for the streaming sinks (ADVICE r6):
 
+- every bucketed state writer commits through ``write_state``'s journaled
+  bucket swap (stage the buckets, fsync a journal, rename each bucket in,
+  clear the journal). A crash injected INTO that swap — after the first
+  bucket rename, or before the journal is published — must replay to the
+  exact uncrashed state: ``read_state`` rolls a torn swap forward (or
+  drops an orphan staging dir) and the replayed batch merges idempotently.
+  Covered for the flagship ``run_cdc_pipeline``, the SCD2 writer and the
+  MV key table.
 - the MV sinks (``streaming/mv.py``, ``streaming/join_mv.py``) commit two
   artifacts per batch — the atomically-published versioned MV and the
   bucketed key state. A crash BETWEEN the two must replay to the exact
   fully-committed state: the MV's own fence skips the non-idempotent delta
   merge, the idempotent key arg-max is re-applied.
-- the fold sink (``streaming/fold.py``) fences PER BUCKET: a crash mid
-  multi-bucket dynamic overwrite leaves buckets at mixed batch ids, and the
-  replay must apply the batch to ONLY the laggard buckets — a whole-batch
+- the fold sink (``streaming/fold.py``) fences PER BUCKET: a crash between
+  two bucket renames leaves buckets at mixed batch ids, and the replay
+  must apply the batch to ONLY the laggard buckets — a whole-batch
   max-fence skip would lose their events forever; a whole-batch re-apply
   would double-fold the committed buckets.
 - a corrupt MV (manifest naming a missing version) must fail LOUDLY, never
   silently rebuild the aggregate from one batch's deltas.
 
-Each test simulates the crash by snapshotting the key-state directory
-before a batch, running the batch to completion, restoring the snapshot
-(for the MV sinks: whole key state = crash after MV publish, before key
-write; for the fold: a single bucket = torn dynamic overwrite), and
-replaying the same batch id."""
+The injected crashes patch ``os.rename`` / ``os.replace`` as the state
+module sees them. The older tests simulate a crash on disk instead:
+snapshot the key-state directory before a batch, run the batch to
+completion, restore the snapshot (for the MV sinks: whole key state = crash
+after MV publish, before key write; for the fold: a single bucket = a swap
+that renamed every bucket but that one), and replay the same batch id."""
 
 from __future__ import annotations
 
@@ -128,7 +137,7 @@ def _fold_canon(df) -> pd.DataFrame:
 
 
 def test_fold_torn_bucket_overwrite_replays_only_laggards(spark, sf_dir):
-    """Crash window: batch 1's dynamic overwrite committed all buckets
+    """Crash window: batch 1's bucket swap committed all buckets
     EXCEPT one, which is restored to its batch-0 content. The replay must
     (a) re-fold batch 1 into the torn bucket and (b) leave the committed
     buckets untouched — the final state equals the uncrashed run
@@ -286,7 +295,7 @@ def test_direct_read_state_heals_torn_journaled_swap(spark, sf_dir):
 
         # tear the swap: move one bucket back into a staging root, delete
         # its table dir, and journal the pending swap (the exact on-disk
-        # shape of a crash between publish_state_buckets' rmtree and rename)
+        # shape of a crash between write_state's rmtree and rename)
         torn = next(
             f"__bucket={bk}"
             for bk in range(FOLD_BUCKETS)
@@ -368,7 +377,7 @@ def test_mv_reader_stalled_across_two_publishes_still_reads(spark):
 def _tear_one_bucket(state: str) -> tuple[str, str]:
     """Move one bucket of a published state back into a staging root and
     journal the pending swap — the exact on-disk shape of a crash between
-    publish_state_buckets' rmtree and rename. Returns (bucket_dir, staged)."""
+    write_state's rmtree and rename. Returns (bucket_dir, staged)."""
     import json
 
     from cdc_postgresql_clickhouse_spark.operators.state import _SWAP_JOURNAL
@@ -491,6 +500,52 @@ def test_lock_free_read_raises_on_live_foreign_lock(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_read_from_another_thread_hits_the_lock_not_the_swap(spark, sf_dir):
+    """Lock ownership is per thread. foreachBatch runs on a callback thread,
+    so a read on the caller's thread while a batch holds the lock must raise
+    StateLockError. It must not treat the batch's lock as its own and roll
+    the live journal forward under the batch's bucket swap."""
+    import threading
+
+    from cdc_postgresql_clickhouse_spark.operators.state import (
+        _SWAP_JOURNAL,
+        StateLockError,
+        _state_lock,
+        read_state,
+    )
+
+    ev = _fold_rows(spark, sf_dir)
+    tmp = tempfile.mkdtemp(prefix="thread_lock_read_")
+    try:
+        state = os.path.join(tmp, "state")
+        ingest_batch_ewma(spark, ev, state, batch_id=0)
+        torn, staged = _tear_one_bucket(state)  # a swap in flight
+        held, release = threading.Event(), threading.Event()
+
+        def batch() -> None:
+            with _state_lock(state):
+                held.set()
+                release.wait(30)
+
+        t = threading.Thread(target=batch)
+        t.start()
+        try:
+            assert held.wait(30)
+            with pytest.raises(StateLockError):
+                read_state(spark, state)
+            # the in-flight swap was left alone
+            assert os.path.exists(os.path.join(state, _SWAP_JOURNAL))
+            assert os.path.isdir(os.path.join(staged, torn))
+        finally:
+            release.set()
+            t.join()
+        assert read_state(spark, state) is not None  # lock released: heals
+        assert not os.path.exists(os.path.join(state, _SWAP_JOURNAL))
+        assert os.path.isdir(os.path.join(state, torn))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_lock_free_read_on_never_written_state(spark, tmp_path):
     """Regression (r10): the unconditional reader lock is a SIBLING file of
     the table dir — on a first-ever read (stream reads state before batch 1
@@ -502,3 +557,168 @@ def test_lock_free_read_on_never_written_state(spark, tmp_path):
     assert read_state(spark, path) is None
     # and the lock was released: a second read works too
     assert read_state(spark, path) is None
+
+
+# --- crash injected into the journaled bucket swap ---------------------------
+
+
+def _golden_pipeline(spark, root):
+    """The flagship path: the golden DML walkthrough as two envelope files,
+    drained through ``run_cdc_pipeline`` one file per trigger."""
+    import json
+
+    from cdc_postgresql_clickhouse_spark.operators.state import (
+        current_state,
+        read_state,
+    )
+    from cdc_postgresql_clickhouse_spark.sources.envelope import (
+        golden_workload_envelopes,
+    )
+    from cdc_postgresql_clickhouse_spark.streaming.pipeline import run_cdc_pipeline
+
+    events = golden_workload_envelopes()
+    chunks = [events[:15], events[15:]]
+    src = os.path.join(root, "src")
+    os.makedirs(src, exist_ok=True)
+
+    def add(i):
+        with open(os.path.join(src, f"batch{i}.json"), "w") as fh:
+            fh.writelines(json.dumps(e) + "\n" for e in chunks[i])
+
+    def drain(state, ckpt):
+        run_cdc_pipeline(spark, src, state, ckpt, max_files_per_trigger=1)
+
+    def final(state):
+        return sorted(map(str, current_state(read_state(spark, state)).collect()))
+
+    return add, drain, final, lambda state: state
+
+
+def _scd2_writer(spark, root):
+    from cdc_postgresql_clickhouse_spark.streaming.scd2 import (
+        read_scd2,
+        run_incremental_scd2,
+    )
+
+    schema = "user_id long, event_id long, event_type string, value double, es long"
+    chunks = [
+        [(u, u, "view", float(u), 100 + u) for u in range(1, 9)],
+        # new users, later changes, and late rows spliced mid-chain
+        [(u, 100 + u, "purchase", u * 2.5, 50 + u * 20) for u in range(1, 13)],
+    ]
+    src = os.path.join(root, "src")
+
+    def add(i):
+        spark.createDataFrame(chunks[i], schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def drain(state, ckpt):
+        run_incremental_scd2(spark, src, state, ckpt, max_files_per_trigger=1)
+
+    def final(state):
+        return sorted(map(str, read_scd2(spark, state).collect()))
+
+    return add, drain, final, lambda state: state
+
+
+def _mv_writer(spark, root):
+    from cdc_postgresql_clickhouse_spark.operators.state import read_state
+    from cdc_postgresql_clickhouse_spark.streaming.mv import run_incremental_mv
+
+    chunks = [
+        [(u, 10, u, "view", 100 * u) for u in range(1, 9)],
+        [(u, 20, 100 + u, "purchase" if u % 3 else "error", 7 * u) for u in range(1, 13)],
+    ]
+    src = os.path.join(root, "src")
+
+    def add(i):
+        spark.createDataFrame(chunks[i], _SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def drain(state, ckpt):
+        run_incremental_mv(spark, src, state, ckpt, max_files_per_trigger=1)
+
+    def final(state):
+        keys = read_state(spark, os.path.join(state, "keys"))
+        return sorted(map(str, read_mv(spark, state).collect())) + sorted(
+            map(str, keys.collect())
+        )
+
+    return add, drain, final, lambda state: os.path.join(state, "keys")
+
+
+class _InjectedCrash(RuntimeError):
+    pass
+
+
+def _arm_crash(m, point: str) -> list:
+    """Patch the state module's ``os`` so the next bucket swap dies at
+    ``point``; returns the list the fake appends to when it fires."""
+    from cdc_postgresql_clickhouse_spark.operators import state as state_mod
+
+    fired: list = []
+    if point == "mid_swap":  # after the first bucket rename
+        real_rename, renamed = os.rename, []
+
+        def rename(src, dst):
+            if os.path.dirname(src).endswith(".staged"):
+                if renamed:
+                    fired.append(dst)
+                    raise _InjectedCrash(f"injected crash before renaming {dst}")
+                renamed.append(dst)
+            real_rename(src, dst)
+
+        m.setattr(state_mod.os, "rename", rename)
+    else:  # "pre_journal": the staged write finished, the journal never lands
+        real_replace = os.replace
+
+        def replace(src, dst):
+            if str(dst).endswith(state_mod._SWAP_JOURNAL):
+                fired.append(dst)
+                raise _InjectedCrash("injected crash before the journal publish")
+            real_replace(src, dst)
+
+        m.setattr(state_mod.os, "replace", replace)
+    return fired
+
+
+@pytest.mark.parametrize("point", ["mid_swap", "pre_journal"])
+@pytest.mark.parametrize(
+    "writer", [_golden_pipeline, _scd2_writer, _mv_writer], ids=["pipeline", "scd2", "mv_keys"]
+)
+def test_crash_inside_bucket_swap_replays_to_uncrashed_state(
+    spark, tmp_path, monkeypatch, writer, point
+):
+    """Kill the second micro-batch inside its bucket publish — after the
+    first bucket rename (a torn swap, journal on disk) or before the
+    journal is published (an orphan staging dir) — then restart on the
+    same checkpoint: the replayed batch must land on exactly the state an
+    uncrashed run reaches, with no older key of a swapped bucket lost."""
+    from pyspark.errors import StreamingQueryException
+
+    from cdc_postgresql_clickhouse_spark.operators.state import _SWAP_JOURNAL
+
+    add, drain, final, table = writer(spark, str(tmp_path))
+    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+
+    add(0)
+    drain(state, ckpt)  # batch 0 commits
+    add(1)
+    with monkeypatch.context() as m:
+        fired = _arm_crash(m, point)
+        with pytest.raises(StreamingQueryException, match="injected crash"):
+            drain(state, ckpt)  # batch 1 dies mid-publish
+    assert fired, "the injected crash never fired"
+    staged = f"{os.path.abspath(table(state))}.staged"
+    journal = os.path.join(table(state), _SWAP_JOURNAL)
+    assert os.path.isdir(staged)
+    assert os.path.exists(journal) == (point == "mid_swap")
+
+    drain(state, ckpt)  # restart: batch 1 replays on the same checkpoint
+    assert not os.path.exists(journal) and not os.path.exists(staged)
+
+    control = str(tmp_path / "control")
+    drain(control, str(tmp_path / "control_ckpt"))
+    assert final(state) == final(control)

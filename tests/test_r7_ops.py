@@ -5,6 +5,8 @@ the norm-outlier gate."""
 
 from __future__ import annotations
 
+import pytest
+
 from cdc_postgresql_clickhouse_spark.queries.pca import QUERIES as PCA_P
 from cdc_postgresql_clickhouse_spark.queries.sketches import KMV_K
 from cdc_postgresql_clickhouse_spark.queries.sketches import QUERIES as SK_P
@@ -273,6 +275,18 @@ def test_bloom_sweep_monotone_and_near_theory(spark, sf_dir):
             assert theory / 3 <= max(measured, 1e-7) <= theory * 3, (
                 m, theory, measured,
             )
+
+
+def test_bloom_sweep_rejects_arms_that_do_not_chain(spark, sf_dir, monkeypatch):
+    """The sweep derives each smaller filter's bit set from the next larger
+    one, which is only exact when the sizes divide each other. A sweep that
+    does not chain must raise ValueError (an assert vanishes under
+    ``python -O`` and would leave wrong bit sets)."""
+    from cdc_postgresql_clickhouse_spark.queries import training
+
+    monkeypatch.setattr(training, "BLOOM_SWEEP_M", (1000, 8192, 65536))
+    with pytest.raises(ValueError, match="divisibility"):
+        training.sketch_bloom_error_sweep(spark, sf_dir)
 
 
 def test_fk_orphans_detects_planted_violations(spark, sf_dir, tmp_path):

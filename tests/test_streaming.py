@@ -132,3 +132,43 @@ def test_multi_batch_pipeline_incremental_buckets(spark, tmp_path):
     touched_dirs = {os.path.dirname(f) for f in changed}
     assert len(touched_dirs) <= 1, touched_dirs
     assert current_state(spark.read.parquet(state_path)).count() == 6
+
+
+def test_continuous_pipeline_returns_a_query_the_caller_can_stop(spark, tmp_path):
+    """Continuous (processing-time) mode hands back its StreamingQuery: the
+    caller drains it with processAllAvailable(), stops it, and the state
+    equals the one-shot golden result."""
+    from cdc_postgresql_clickhouse_spark.operators.cdc_transform import (
+        changes_to_state_updates,
+    )
+    from cdc_postgresql_clickhouse_spark.operators.state import (
+        consistency_check,
+        read_state,
+    )
+    from cdc_postgresql_clickhouse_spark.sources.envelope import golden_workload_df
+
+    env_dir = str(tmp_path / "envelopes")
+    os.makedirs(env_dir)
+    events = golden_workload_envelopes()
+    for fi, chunk in enumerate([events[:15], events[15:]]):
+        with open(os.path.join(env_dir, f"batch{fi}.json"), "w") as f:
+            for e in chunk:
+                f.write(json.dumps(e) + "\n")
+    state_path = str(tmp_path / "state")
+
+    q = run_cdc_pipeline(
+        spark, env_dir, state_path, str(tmp_path / "ckpt"),
+        available_now=False, trigger_processing_time="200 milliseconds",
+    )
+    try:
+        assert q.isActive
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert not q.isActive
+    assert q.lastProgress is not None
+
+    got = current_state(read_state(spark, state_path))
+    want = current_state(changes_to_state_updates(golden_workload_df(spark)))
+    assert got.count() == 6
+    assert consistency_check(got, want)
