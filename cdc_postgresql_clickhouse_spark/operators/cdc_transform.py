@@ -25,9 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: op codes admitted into the state table (c=insert, r=snapshot read,
-#: u=update, d=delete) — reference README.md:97, clickhouse_schemas.sql:58.
-ADMITTED_OPS = ("c", "r", "u", "d")
+from cdc_postgresql_clickhouse_spark.sources.envelope import ADMITTED_OPS
 
 #: columns taken from the before-image on delete, after-image otherwise.
 SWITCHED_COLUMNS = ("booking_id", "status", "is_canceled")

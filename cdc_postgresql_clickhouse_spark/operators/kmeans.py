@@ -104,17 +104,24 @@ def lloyd_refine(
             [([list(c) for c in cents], _norms(cents))],
             "cm array<array<double>>, cns array<double>",
         )
+        # try_divide: a zero norm gives a NULL cosine, not an ANSI error
         sims = F.transform(
             F.col("cm"),
-            lambda c, i: _dot(c, vec, dim)
-            / (F.element_at(F.col("cns"), i + 1) * F.col("__vn")),
+            lambda c, i: F.try_divide(
+                _dot(c, vec, dim), F.element_at(F.col("cns"), i + 1) * F.col("__vn")
+            ),
         )
         assigned = (
             emb.select(id_col, vec_col, F.sqrt(_dot(vec, vec, dim)).alias("__vn"))
             .join(F.broadcast(model_df), how="cross")
             .select(sims.alias("__sims"), vec)
             .select(
-                (F.array_position(F.col("__sims"), F.array_max(F.col("__sims"))) - 1)
+                # a zero-norm vector has all-NULL cosines, hence no argmax:
+                # it joins cluster 0
+                F.coalesce(
+                    F.array_position(F.col("__sims"), F.array_max(F.col("__sims"))) - 1,
+                    F.lit(0),
+                )
                 .cast("int")
                 .alias("cid"),
                 vec,

@@ -12,13 +12,15 @@ streaming state store — key cardinality is bounded by storage, not executor
 memory, which is the 100 TB posture. Two equivalent consumption modes:
 
 1. ``current_state`` — read-time dedup view (the ``FINAL`` analogue, R1):
-   window arg-max per key. Single hash-partition shuffle on the key; at scale
-   the input is pre-bucketed by key so the shuffle is a no-op.
+   arg-max per key as one aggregation, ``max(struct(total order))`` grouped
+   by the key. Single hash-partition shuffle on the key; at scale the input
+   is pre-bucketed by key so the shuffle is a no-op.
 2. ``apply_changes`` — batch/micro-batch upsert that materializes the merged
    state (the background-merge analogue). On Delta this is ``MERGE INTO``;
    on plain parquet we implement merge-by-rewrite: union(state, updates) →
-   arg-max → overwrite. With state partitioned by key-hash bucket, only
-   buckets containing updated keys need rewriting at scale.
+   the same arg-max → overwrite. With state partitioned by key-hash bucket,
+   only buckets containing updated keys are rewritten, and the merge shares
+   its one shuffle with the bucket publish (``upsert_changes_bucketed``).
 
 Version semantics, NOT event time (survey ST2): a late event simply loses the
 max-version contest; no watermarks. Idempotent under at-least-once replay
@@ -46,7 +48,6 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 DEFAULT_KEY = ("booking_id",)
 DEFAULT_VERSION_ORDER = ("version", "ts_ms", "is_deleted")
@@ -157,12 +158,29 @@ def break_state_lock(path: str, force: bool = False) -> bool:
 
 def _total_order(
     df: DataFrame, key_cols: tuple[str, ...], version_cols: tuple[str, ...]
-) -> list:
+) -> list[str]:
     """Version order extended to a TOTAL order: remaining columns (sorted by
     name) break any residual tie, making the per-key winner a deterministic
     function of the change multiset — retry/replay/speculation-safe."""
     rest = sorted(set(df.columns) - set(key_cols) - set(version_cols))
-    return [F.col(c).desc() for c in (*version_cols, *rest)]
+    return [*version_cols, *rest]
+
+
+def _argmax_per_key(
+    df: DataFrame, key_cols: tuple[str, ...], version_cols: tuple[str, ...]
+) -> DataFrame:
+    """One row per key: the row that is greatest in ``_total_order``, as
+    ``max(struct(total order))`` grouped by the key. A struct compares
+    field by field and ranks NULL lowest, so the winner is the first row
+    of ``ORDER BY`` every order column ``DESC NULLS LAST``. Every non-key
+    column is in the struct, so the winner is the whole row, in one
+    aggregation that combines map-side before its one shuffle by key."""
+    return (
+        df.groupBy(*key_cols)
+        .agg(F.max(F.struct(*_total_order(df, key_cols, version_cols))).alias("__r"))
+        .select(*key_cols, "__r.*")
+        .select(*df.columns)
+    )
 
 
 def current_state(
@@ -174,17 +192,10 @@ def current_state(
 ) -> DataFrame:
     """R1 — the FINAL-equivalent current-state view (survey §2.10 ST5).
 
-    Arg-max per key over the version order, then soft-delete filter. One
-    shuffle by key; Catalyst pushes the subsequent filter and any caller
-    projections into the scan.
+    Arg-max per key over the total version order (``_argmax_per_key``: one
+    aggregation, one shuffle by key), then the soft-delete filter.
     """
-    w = Window.partitionBy(*key_cols).orderBy(*_total_order(updates, key_cols, version_cols))
-    out = (
-        updates.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .filter(F.col(deleted_col) == 0)
-    )
+    out = _argmax_per_key(updates, key_cols, version_cols).filter(F.col(deleted_col) == 0)
     if not keep_internal:
         out = out.drop(deleted_col, "ts_ms")
     return out
@@ -220,13 +231,13 @@ def apply_changes(
     output filtered).
 
     Equivalent to Delta ``MERGE INTO ... WHEN MATCHED AND s.version >
-    t.version`` but expressed as union + arg-max so it works on any store and
-    stays a single shuffle. Tombstones are retained (not dropped) which is
-    exactly ClickHouse's part-merge behavior before ``FINAL``.
+    t.version`` but expressed as union + arg-max (``_argmax_per_key``) so it
+    works on any store and stays a single shuffle. Tombstones are retained
+    (not dropped) which is exactly ClickHouse's part-merge behavior before
+    ``FINAL``.
     """
     merged = updates if state is None else state.unionByName(updates, allowMissingColumns=True)
-    w = Window.partitionBy(*key_cols).orderBy(*_total_order(merged, key_cols, version_cols))
-    return merged.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+    return _argmax_per_key(merged, key_cols, version_cols)
 
 
 BUCKET_COL = "__bucket"
@@ -234,6 +245,14 @@ BUCKET_COL = "__bucket"
 
 def _bucket_expr(key_cols: tuple[str, ...], n_buckets: int):
     return F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
+
+
+def _publish_partitions(spark: SparkSession, key_buckets: int) -> int:
+    """Task count of a bucket publish: one per task slot, never more than
+    there are buckets. A repartition by an explicit count is never
+    coalesced by AQE, so every slot writes; hashing on the bucket id keeps
+    each bucket in one task, so each bucket is still one file."""
+    return min(key_buckets, spark.sparkContext.defaultParallelism)
 
 
 def _touched_buckets(
@@ -326,6 +345,9 @@ def write_state(
     ``pmod(xxhash64(key), N)`` (the unit of incremental rewrite), and ONLY
     the buckets present in ``state`` are replaced; every other bucket
     directory is left byte-identical. On Delta this becomes MERGE + OPTIMIZE.
+    An existing ``__bucket`` column is reused as the bucket id; the staged
+    write repartitions by it into ``_publish_partitions`` tasks (a no-op
+    when the input is already partitioned so: ``upsert_changes_bucketed``).
 
     Protocol (same journal discipline as ``layout.optimize_clustered``;
     the ReplacingMergeTree part swap, per bucket): (1) write the buckets'
@@ -344,10 +366,13 @@ def write_state(
     staged_root = f"{os.path.abspath(path)}.staged"
     with _own_lock(path):
         recover_bucket_swap(path)  # a torn earlier swap lands before this one
-        out = state.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets))
-        # keyed repartition → each bucket lands in one task → one file/bucket
+        out = (
+            state
+            if BUCKET_COL in state.columns
+            else state.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets))
+        )
         (
-            out.repartition(F.col(BUCKET_COL))
+            out.repartition(_publish_partitions(out.sparkSession, key_buckets), BUCKET_COL)
             .write.mode("overwrite")
             .partitionBy(BUCKET_COL)
             .parquet(staged_root)
@@ -421,13 +446,19 @@ def upsert_changes_bucketed(
 
     Steps: (1) bucket the batch keys and collect the distinct bucket ids —
     driver-side but bounded by ``key_buckets``, never by data; (2) read ONLY
-    those bucket partitions (partition-pruned scan); (3) localCheckpoint the
-    pruned state so the subsequent publish does not read from the path it
-    writes (and to cut the plan lineage); (4) arg-max merge; (5) the
-    journaled bucket swap of ``write_state`` publishes exactly the touched
-    buckets, crash-atomically: a replayed batch after a crash at any step
-    merges into committed state again, and the arg-max makes that a no-op
-    for changes already applied.
+    those bucket partitions (partition-pruned scan); (3) arg-max merge of
+    state and batch; (4) the journaled bucket swap of ``write_state``
+    publishes exactly the touched buckets, crash-atomically: it stages the
+    buckets before it swaps any of them, so the write never reads a
+    directory it is replacing, and a replayed batch after a crash at any
+    step merges into committed state again, where the arg-max makes it a
+    no-op for changes already applied.
+
+    One shuffle: the union of state and batch gets its ``__bucket`` column
+    and is repartitioned by it into ``_publish_partitions`` tasks; the
+    arg-max groups by (``__bucket``, key) inside those partitions, and
+    ``write_state``'s identical repartition is removed by Catalyst. The
+    publish therefore runs on every task slot, one file per bucket.
 
     Returns the touched bucket ids (for tests/observability).
 
@@ -439,9 +470,11 @@ def upsert_changes_bucketed(
         return []
     with _state_lock(path):
         state = read_state(spark, path, buckets=touched)
-        if state is not None:
-            state = state.localCheckpoint(eager=True)
-        merged = apply_changes(state, updates, key_cols, version_cols)
+        union = updates if state is None else state.unionByName(updates, allowMissingColumns=True)
+        union = union.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets)).repartition(
+            _publish_partitions(spark, key_buckets), BUCKET_COL
+        )
+        merged = apply_changes(None, union, (BUCKET_COL, *key_cols), version_cols)
         write_state(merged, path, key_buckets=key_buckets, key_cols=key_cols)
     return touched
 

@@ -26,25 +26,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cdc_postgresql_clickhouse_spark.operators.state import apply_changes
 from cdc_postgresql_clickhouse_spark.sources.registry import load_table
 from cdc_postgresql_clickhouse_spark.queries._pending import flip_pending
 
 
 def _latest(ev: DataFrame) -> DataFrame:
-    """Per-key latest row as a hash aggregation (SURVEY §2.4 A2): max_by on
-    the (ts, event_id) version struct. Unlike the row_number window (full-row
-    shuffle + per-partition sort), this combines map-side, so shuffle volume
-    is one row per (key × map partition) — the shape that survives 1000
-    executors × 100 TB. (ts, event_id) is unique per key, so the arg-max is
-    deterministic and matches the ORDER BY ts DESC, event_id DESC oracle."""
-    return (
-        ev.groupBy("user_id")
-        .agg(
-            F.max_by(
-                F.struct("event_id", "event_type", "value"), F.struct("ts", "event_id")
-            ).alias("__r")
-        )
-        .select("user_id", "__r.*")
+    """Per-key latest row through the pipeline's own arg-max
+    (``operators.state.apply_changes``, SURVEY §2.4 A2): one aggregation
+    that combines map-side, so shuffle volume is one row per (key × map
+    partition) — the shape that survives 1000 executors × 100 TB.
+    (ts, event_id) is unique per key, so the arg-max is deterministic and
+    matches the ORDER BY ts DESC, event_id DESC oracle."""
+    return apply_changes(
+        None,
+        ev.select("user_id", "event_id", "ts", "event_type", "value"),
+        key_cols=("user_id",),
+        version_cols=("ts", "event_id"),
     )
 
 
@@ -471,17 +469,7 @@ def cdc_pk_change_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
-    wlast = (
-        ev.groupBy("user_id")
-        .agg(
-            F.max_by(
-                F.struct("event_id", "event_type", "value", "ts"),
-                F.struct("ts", "event_id"),
-            ).alias("__r")
-        )
-        .select("user_id", "__r.*")
-    )
-    migr = wlast.filter(F.col("user_id") % 10 == 3)
+    migr = _latest(ev).filter(F.col("user_id") % 10 == 3)
     dels = migr.select(
         "user_id",
         (F.col("event_id") + _PK_DEL_EID).alias("event_id"),

@@ -21,7 +21,7 @@ compatibility boundary, not a structural transform. Conventions carried over:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -62,6 +62,35 @@ ENVELOPE_SCHEMA = StructType(
 )
 
 
+#: op codes admitted into the state table (c=insert, r=snapshot read,
+#: u=update, d=delete) — reference README.md:97, clickhouse_schemas.sql:58.
+ADMITTED_OPS = ("c", "r", "u", "d")
+
+#: where the JSON parser keeps the raw text of a record it could not parse
+#: whole (Spark's default ``columnNameOfCorruptRecord``).
+CORRUPT_RECORD_COL = "_corrupt_record"
+
+DLQ_REASON = "unparseable envelope or missing or unknown op"
+
+
+def with_corrupt_record(schema: StructType) -> StructType:
+    """``schema`` plus the parser's corrupt-record column (a copy —
+    ``StructType.add`` would mutate a shared schema in place)."""
+    return StructType([*schema.fields, StructField(CORRUPT_RECORD_COL, StringType())])
+
+
+def is_dead_letter(envelope: Column | None = None) -> Column:
+    """The one dead-letter verdict for a parsed envelope: the parser flagged
+    the record corrupt (even when it salvaged some fields, the op among
+    them — a partly parsed record must not upsert a partial image), or the op
+    is missing, or it is not in ``ADMITTED_OPS``. ``envelope`` is the parsed
+    struct; ``None`` reads top-level columns (the JSON file source). Never
+    NULL, so ``~is_dead_letter()`` is exactly the valid set."""
+    field = F.col if envelope is None else envelope.getField
+    op = field("op")
+    return field(CORRUPT_RECORD_COL).isNotNull() | op.isNull() | ~op.isin(*ADMITTED_OPS)
+
+
 def decode_json_envelopes(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """Decode schemaless-JSON envelope records (the reference's JsonConverter
     with schemas disabled, ``debezium_configuration.json:28,47``) into typed
@@ -81,20 +110,24 @@ def decode_json_envelopes_with_dlq(
     The reference's connector stack either drops or stalls on malformed
     records (Kafka Connect error tolerance); a Spark-native pipeline should
     quarantine them instead — a poisoned message must never stall 100 TB/day
-    of flow, and must stay replayable. A record is dead if it is not
-    parseable JSON of the envelope shape or carries no op code; the raw
-    bytes are preserved for replay-after-fix. Both outputs derive from one
-    decode of the same input (shared subtree, no double parse at the source).
+    of flow, and must stay replayable. A record is dead by ``is_dead_letter``
+    — the same verdict ``run_cdc_pipeline`` gives; the raw bytes are
+    preserved for replay-after-fix. Both outputs derive from one decode of
+    the same input (shared subtree, no double parse at the source).
     """
     decoded = raw.filter(F.col(value_col).isNotNull()).select(
         F.col(value_col).cast("string").alias("__raw"),
-        F.from_json(F.col(value_col).cast("string"), ENVELOPE_SCHEMA).alias("e"),
+        F.from_json(
+            F.col(value_col).cast("string"),
+            with_corrupt_record(ENVELOPE_SCHEMA),
+            {"columnNameOfCorruptRecord": CORRUPT_RECORD_COL},
+        ).alias("e"),
     )
-    is_dead = F.col("e").isNull() | F.col("e.op").isNull()
-    valid = decoded.filter(~is_dead).select("e.*")
+    is_dead = is_dead_letter(F.col("e"))
+    valid = decoded.filter(~is_dead).select("e.*").drop(CORRUPT_RECORD_COL)
     dead = decoded.filter(is_dead).select(
         F.col("__raw").alias("raw_value"),
-        F.lit("unparseable envelope or missing op").alias("dlq_reason"),
+        F.lit(DLQ_REASON).alias("dlq_reason"),
     )
     return valid, dead
 

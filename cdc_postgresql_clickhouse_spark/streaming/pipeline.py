@@ -5,17 +5,20 @@ Kafka → ClickHouse sink → ``bookings_changes`` → materialized view →
 ``bookings``. Five process boundaries collapse into one incremental Catalyst
 plan (survey §3.1):
 
-  readStream(envelopes) → changes_to_state_updates → foreachBatch(apply_changes)
+  readStream(envelopes) → changes_to_state_updates → foreachBatch(upsert_changes_bucketed)
 
 - Source: file stream of JSON envelopes here; swap ``format("kafka")`` +
   ``decode_json_envelopes`` for a live Debezium topic — the transform is the
   same DataFrame function either way (S1/S11).
 - Trigger: 500 ms micro-batches mirror ``poll.interval.ms=500``
   (``debezium_configuration.json:11``, S4); tests use ``availableNow``.
-- Sink: ``foreachBatch`` upsert into the state table (S9). Checkpointing
-  makes the file/Kafka source exactly-once into the sink; the version
-  arg-max additionally makes any replay a no-op (S10) — strictly stronger
-  than the reference's at-least-once.
+- Sink: ``foreachBatch`` splits off dead letters (``is_dead_letter``) and
+  upserts the rest with ``operators.state.upsert_changes_bucketed`` (S9):
+  one shuffle by bucket serves the arg-max merge and the publish, whose
+  write uses every task slot. Checkpointing makes the file/Kafka source
+  exactly-once into the sink; the version arg-max additionally makes any
+  replay a no-op (S10) — strictly stronger than the reference's
+  at-least-once.
 - Commit: each batch publishes its touched key-hash buckets through the
   journaled bucket swap of ``operators.state.write_state`` — every bucket
   is wholly old or wholly new, as a ReplacingMergeTree part swap is. A
@@ -42,7 +45,13 @@ from pyspark.sql.streaming import StreamingQuery
 
 from cdc_postgresql_clickhouse_spark.operators.cdc_transform import changes_to_state_updates
 from cdc_postgresql_clickhouse_spark.operators.state import upsert_changes_bucketed
-from cdc_postgresql_clickhouse_spark.sources.envelope import ENVELOPE_SCHEMA
+from cdc_postgresql_clickhouse_spark.sources.envelope import (
+    CORRUPT_RECORD_COL,
+    DLQ_REASON,
+    ENVELOPE_SCHEMA,
+    is_dead_letter,
+    with_corrupt_record,
+)
 
 DEFAULT_KEY_BUCKETS = 16
 
@@ -68,9 +77,10 @@ def run_cdc_pipeline(
     the caller can read its progress, ``processAllAvailable()`` or
     ``stop()`` it.
 
-    ``dlq_path``: when set, records that parse to no op code (malformed or
-    non-envelope JSON) are appended there with the whole-record JSON
-    preserved for replay-after-fix, instead of being silently dropped — a
+    ``dlq_path``: when set, dead letters (``sources.envelope.is_dead_letter``:
+    a corrupt record, even one whose op was salvaged, or a missing or
+    unknown op) are appended there with the whole-record JSON preserved for
+    replay-after-fix, instead of being silently dropped — a
     poisoned message must never stall or silently thin the stream. The split
     happens inside the SAME micro-batch as the upsert (one source scan, two
     sinks, every trigger — continuous mode included); DLQ appends are
@@ -94,14 +104,7 @@ def run_cdc_pipeline(
     state widens on merge (mergeSchema + allowMissingColumns), pre-ALTER
     rows reading NULL — ClickHouse ``ADD COLUMN`` semantics.
     """
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    base_schema = envelope_schema or ENVELOPE_SCHEMA
-    # copy — StructType.add would mutate the shared schema object in place
-    schema_with_corrupt = StructType(
-        [*base_schema.fields, StructField("_corrupt_record", StringType())]
-    )
-    reader = spark.readStream.schema(schema_with_corrupt)
+    reader = spark.readStream.schema(with_corrupt_record(envelope_schema or ENVELOPE_SCHEMA))
     if max_files_per_trigger:
         # bounds per-batch work (and lets tests drive one file per batch);
         # availableNow still drains the whole backlog, batch by batch
@@ -111,16 +114,16 @@ def run_cdc_pipeline(
     def upsert_batch(batch_df, batch_id: int) -> None:
         # One scan of the batch, split to two sinks: dead letters append to
         # the DLQ, valid envelopes merge into the bucketed state table.
-        is_dead = F.col("op").isNull()
+        is_dead = is_dead_letter()
         if dlq_path:
             dead = batch_df.filter(is_dead).select(
-                F.coalesce(F.col("_corrupt_record"), F.to_json(F.struct("*"))).alias(
+                F.coalesce(F.col(CORRUPT_RECORD_COL), F.to_json(F.struct("*"))).alias(
                     "raw_value"
                 ),
-                F.lit("unparseable envelope or missing op").alias("dlq_reason"),
+                F.lit(DLQ_REASON).alias("dlq_reason"),
             )
             dead.write.mode("append").json(dlq_path)
-        valid = batch_df.filter(~is_dead).drop("_corrupt_record")
+        valid = batch_df.filter(~is_dead).drop(CORRUPT_RECORD_COL)
         updates = changes_to_state_updates(valid, extra_image_columns=extra_image_columns)
         upsert_changes_bucketed(spark, updates, state_path, key_buckets=key_buckets)
 

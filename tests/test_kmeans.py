@@ -49,3 +49,11 @@ def test_ivf_with_refined_quantizer_end_to_end(spark, sf_dir):
                                         F.max("rank").alias("hi"))
     bad = per_q.filter((F.col("n") > 5) | (F.col("lo") != 1) | (F.col("hi") != F.col("n")))
     assert bad.isEmpty()
+
+
+def test_lloyd_zero_vector_joins_cluster_zero(spark):
+    """A zero-norm vector has no defined cosine to any centroid; it is
+    assigned cluster 0 instead of a NULL id the centroid update cannot
+    index."""
+    emb = spark.createDataFrame([(0, [0.0, 0.0, 0.0])], "vec_id long, e array<double>")
+    assert lloyd_refine(emb, k=1, iters=1) == [[0.0, 0.0, 0.0]]

@@ -15,7 +15,7 @@ them identically regardless of arrival order or batching.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from cdc_postgresql_clickhouse_spark.operators.state import (
@@ -149,6 +149,85 @@ def test_bucketed_upsert_equals_one_shot(spark, tmp_path_factory, rows, n_batche
     one_shot = apply_changes(None, _df(spark, rows))
     assert consistency_check(one_shot, incremental)
     assert incremental.count() == one_shot.count()
+
+
+# Law test for the arg-max: NULLs in version and rest columns, full version
+# ties left to the rest columns, exact duplicates, and a two-column key.
+_WIDE_SCHEMA = (
+    "k1 int, k2 string, version long, ts_ms long, is_deleted int, payload long, note string"
+)
+
+
+def _maybe(s):
+    return st.one_of(st.none(), s)
+
+
+wide_rows_strategy = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=1),
+        _maybe(st.sampled_from(["a", "b"])),
+        _maybe(st.integers(min_value=0, max_value=2)),
+        _maybe(st.integers(min_value=0, max_value=1)),
+        st.integers(min_value=0, max_value=1),
+        _maybe(st.integers(min_value=0, max_value=2)),
+        _maybe(st.sampled_from(["", "x", "y"])),
+    ),
+    min_size=1,
+    max_size=14,
+)
+
+
+def _window_argmax(df, key_cols, version_cols):
+    """The reference: first row per key of ``row_number()`` over every
+    non-key column descending (nulls last) — version columns first, then
+    the rest by name."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    rest = sorted(set(df.columns) - set(key_cols) - set(version_cols))
+    w = Window.partitionBy(*key_cols).orderBy(*(F.col(c).desc() for c in (*version_cols, *rest)))
+    return df.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
+
+
+def _bag(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.collect())
+
+
+@given(rows=wide_rows_strategy, n_dups=st.integers(min_value=0, max_value=3), split=st.integers(0, 14))
+@example(
+    # (0, "a"): a NULL version loses, and the version tie is broken on the
+    # rest columns by NAME order (note before payload); (1, NULL): a NULL
+    # ts_ms loses; (0, "b"): a tie through note left to a NULL payload
+    rows=[
+        (0, "a", 1, 0, 0, 1, "x"),
+        (0, "a", 1, 0, 0, 0, "y"),
+        (0, "a", None, 0, 0, 5, "z"),
+        (1, None, 1, None, 1, None, None),
+        (1, None, 1, 0, 1, None, ""),
+        (0, "b", 1, 0, 0, None, "x"),
+        (0, "b", 1, 0, 0, 2, "x"),
+    ],
+    n_dups=2,
+    split=3,
+)
+@PROP_SETTINGS
+def test_argmax_equals_row_number_window(spark, rows, n_dups, split):
+    """``apply_changes`` and ``current_state`` pick, column for column, the
+    row the ``row_number`` window picks."""
+    keys, versions = ("k1", "k2"), ("version", "ts_ms")
+    rows = rows + rows[:n_dups]  # exact duplicate rows
+    df = spark.createDataFrame(rows, _WIDE_SCHEMA)
+    ref = _window_argmax(df, keys, versions)
+    assert apply_changes(None, df, keys, versions).columns == df.columns
+    assert _bag(apply_changes(None, df, keys, versions)) == _bag(ref)
+    state = spark.createDataFrame(rows[:split], _WIDE_SCHEMA)
+    updates = spark.createDataFrame(rows[split:], _WIDE_SCHEMA)
+    assert _bag(apply_changes(state, updates, keys, versions)) == _bag(ref)
+    live = ref.filter("is_deleted = 0")
+    assert _bag(current_state(df, keys, versions, keep_internal=True)) == _bag(live)
+    assert _bag(current_state(df, keys, versions)) == _bag(live.drop("is_deleted", "ts_ms"))
 
 
 def test_lsh_tuning_report_amplification_monotonicity(spark, sf_dir):

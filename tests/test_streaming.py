@@ -80,6 +80,54 @@ def test_bucketed_upsert_rewrites_only_dirty_buckets(spark, tmp_path):
     assert final.filter(F.col("booking_id") == "b7").collect()[0]["status"] == "Closed"
 
 
+def test_bucketed_upsert_runs_one_shuffle(spark, tmp_path, monkeypatch):
+    """One upsert into an existing 16-bucket state runs at most 5 Spark jobs
+    (touched-bucket collect, state schema read, the one shuffle, the write),
+    and the frame the bucket publish writes has exactly one Exchange: the
+    arg-max shares its shuffle with the publish, and no checkpoint runs."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from cdc_postgresql_clickhouse_spark.operators.state import (
+        read_state,
+        upsert_changes_bucketed,
+        write_state,
+    )
+    from cdc_postgresql_clickhouse_spark.plans.inspect import shuffle_count
+
+    schema = "booking_id string, version long, ts_ms long, is_deleted int, status string"
+    path = str(tmp_path / "state")
+    write_state(
+        spark.createDataFrame([(f"b{i}", 1, 0, 0, "Open") for i in range(400)], schema),
+        path,
+        key_buckets=16,
+    )
+    upd = spark.createDataFrame([(f"b{i}", 2, 1, 0, "Closed") for i in range(0, 400, 7)], schema)
+
+    published = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, out_path, *args, **kwargs):
+        published.append(self._df)
+        return parquet(self, out_path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    sc = spark.sparkContext
+    group = f"pin-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        upsert_changes_bucketed(spark, upd, path, key_buckets=16)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    monkeypatch.undo()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 5, jobs
+    assert len(published) == 1
+    assert shuffle_count(published[0]) == 1
+    final = read_state(spark, path)
+    assert final.count() == 400
+    assert final.filter(F.col("status") == "Closed").count() == len(range(0, 400, 7))
+
+
 def test_pipeline_single_source_scan(spark, tmp_path):
     """DLQ split happens inside the main micro-batch: no second readStream,
     no separate DLQ checkpoint."""
@@ -172,3 +220,50 @@ def test_continuous_pipeline_returns_a_query_the_caller_can_stop(spark, tmp_path
     want = current_state(changes_to_state_updates(golden_workload_df(spark)))
     assert got.count() == 6
     assert consistency_check(got, want)
+
+
+# An envelope whose after-image has a mistyped field: the JSON parser flags
+# the record corrupt but salvages the fields it could read, the op among
+# them. A syntactically truncated envelope, by contrast, parses to no op.
+_SALVAGED = json.dumps(
+    {
+        "op": "u",
+        "ts_ms": 1700000009999,
+        "source": {"sequence": "x", "lsn": 999},
+        "after": {"id": 1, "booking_id": "b1", "status": "Hijacked", "is_deleted": 7},
+    }
+)
+_TRUNCATED = _SALVAGED[: _SALVAGED.index('"Hijacked"') + 5]
+
+
+def test_salvaged_corrupt_envelope_is_a_dead_letter_at_both_decoders(spark, tmp_path):
+    """A corrupt record whose op survived parsing is dead at both decode
+    sites — the streaming pipeline and ``decode_json_envelopes_with_dlq`` —
+    and never upserts its partial after-image."""
+    from cdc_postgresql_clickhouse_spark.sources.envelope import (
+        decode_json_envelopes_with_dlq,
+    )
+
+    env_dir = str(tmp_path / "envelopes")
+    os.makedirs(env_dir)
+    with open(os.path.join(env_dir, "batch.json"), "w") as f:
+        for e in golden_workload_envelopes():
+            f.write(json.dumps(e) + "\n")
+        f.write(_SALVAGED + "\n")
+        f.write(_TRUNCATED + "\n")
+        f.write(json.dumps({"op": "t", "ts_ms": 1, "source": {"lsn": 1000}}) + "\n")
+    state_path, dlq = str(tmp_path / "state"), str(tmp_path / "dlq")
+    run_cdc_pipeline(spark, env_dir, state_path, str(tmp_path / "ckpt"), dlq_path=dlq)
+    assert spark.read.json(dlq).count() == 3
+    live = {r["booking_id"]: r["status"] for r in current_state(spark.read.parquet(state_path)).collect()}
+    assert len(live) == 6 and live["b1"] == "Open", live
+
+    raw = spark.createDataFrame(
+        [(_SALVAGED,), (_TRUNCATED,), (json.dumps(golden_workload_envelopes()[0]),)],
+        "value string",
+    )
+    valid, dead = decode_json_envelopes_with_dlq(raw)
+    assert dead.count() == 2
+    rows = valid.collect()
+    assert [r["op"] for r in rows] == ["r"]
+    assert "_corrupt_record" not in valid.columns
