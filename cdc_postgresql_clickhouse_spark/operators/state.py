@@ -46,8 +46,9 @@ import os
 import shutil
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DEFAULT_KEY = ("booking_id",)
 DEFAULT_VERSION_ORDER = ("version", "ts_ms", "is_deleted")
@@ -258,11 +259,21 @@ def _publish_partitions(spark: SparkSession, key_buckets: int) -> int:
 def _touched_buckets(
     df: DataFrame, key_cols: tuple[str, ...], n_buckets: int
 ) -> list[int]:
-    """The sorted distinct key-hash buckets of ``df``'s rows — one small
-    driver collect, bounded by ``n_buckets``, never by data."""
-    return sorted(
-        r[0] for r in df.select(_bucket_expr(key_cols, n_buckets)).distinct().collect()
+    """The sorted distinct key-hash buckets of ``df``'s rows, in ONE Spark
+    job with no shuffle: a ``noop`` write of the bucket ids observes their
+    ``collect_set``, which the scan tasks build in accumulators — bounded
+    by ``n_buckets``, never by data. The ``Observation`` is unnamed (a
+    fresh generated name per call), so two calls on frames that share
+    lineage never clash."""
+    obs = Observation()
+    (
+        df.select(_bucket_expr(key_cols, n_buckets).alias("bk"))
+        .observe(obs, F.collect_set("bk").alias("bk"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
     )
+    return sorted(obs.get["bk"])
 
 
 def _unfenced_buckets_keyed(
@@ -291,6 +302,71 @@ def _unfenced_buckets_keyed(
     return [bk for bk in touched if bk not in fenced]
 
 
+_SWAP_JOURNAL = "_state_swap_journal.json"
+# The table's schema, recorded at every commit (the analogue of the
+# columns.txt a ReplacingMergeTree part keeps next to its data), so a read
+# never scans files to learn the table's shape. The leading "_" keeps it,
+# like the journal, out of Spark's file index.
+_SCHEMA_RECORD = "_state_schema.json"
+
+
+def _publish_json(dst: str, obj) -> None:
+    """Replace ``dst`` with ``obj`` as JSON, durably: write a tmp sibling,
+    fsync it, then ``os.replace`` it in, so ``dst`` is whole, old or new."""
+    tmp = dst + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, dst)
+
+
+def _recorded_schema(path: str) -> StructType | None:
+    """The data schema recorded for the table at ``path``, or None if it
+    has no record."""
+    try:
+        with open(os.path.join(path, _SCHEMA_RECORD)) as fh:
+            return StructType.fromJson(json.load(fh))
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+
+
+def _read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """The table at ``path``, ``__bucket`` included, or None if there is
+    none. With a schema record the read takes its schema from the record
+    and starts no Spark job. A table with no record (written before the
+    record existed, or by plain Spark) falls back to ``mergeSchema``
+    inference: after a T4 widening, buckets written before the ALTER have
+    fewer columns than buckets written after, so every file's footer is
+    read, in one parallel job, and their schemas are unioned."""
+    if not os.path.exists(path):
+        return None  # first batch: no state yet
+    record = _recorded_schema(path)
+    reader = spark.read.option("mergeSchema", "true") if record is None else spark.read.schema(record)
+    try:
+        return reader.parquet(path)
+    except Exception:
+        return None  # a directory with no data file yet
+
+
+def _table_schema(staged: DataFrame, prev: StructType | None) -> dict:
+    """The data schema the table has once ``staged`` is published over a
+    table whose data schema is ``prev``, as inference would give it:
+    ``staged``'s columns, then every column of ``prev`` that ``staged``
+    lacks, by name. The merge is Spark's own, the one ``mergeSchema`` folds
+    the file footers with, so a type conflict raises here, before anything
+    is published. Every field is nullable, as parquet reads it back.
+    ``__bucket`` is not recorded: the read discovers it from the directory
+    names and puts it last."""
+    spark = staged.sparkSession
+    parse = spark._jvm.org.apache.spark.sql.types.DataType.fromJson
+    data = StructType([f for f in staged.schema.fields if f.name != BUCKET_COL])
+    schema = parse(data.json())
+    if prev is not None:
+        schema = schema.merge(parse(prev.json()), spark.conf.get("spark.sql.caseSensitive") == "true")
+    return json.loads(schema.asNullable().json())
+
+
 def read_state(
     spark: SparkSession, path: str, buckets: list[int] | None = None
 ) -> DataFrame | None:
@@ -298,14 +374,21 @@ def read_state(
     key-hash buckets (partition pruning: only those directories are scanned —
     the read is O(touched buckets), not O(state)).
 
-    A torn bucket swap (crash between ``write_state``'s per-bucket renames)
-    is rolled FORWARD here, under the state lock, before the read plans — a
-    direct reader would otherwise see a journaled-but-unswapped bucket as
-    never-committed state (ADVICE r8). Lock discipline (ADVICE r9): if the
-    calling thread already holds the path's lock (every ingest path calls
-    read_state inside its locked section), heal directly under the caller's
-    lock; re-acquiring the non-reentrant O_EXCL lock would raise
-    StateLockError against the caller's own fence. A lock-free read takes
+    Protocol, under the state lock: (1) roll a torn bucket swap (crash
+    between ``write_state``'s per-bucket renames) FORWARD — a direct reader
+    would otherwise see a journaled-but-unswapped bucket as
+    never-committed state (ADVICE r8); (2) read the schema record and list
+    the table (``_read_table``). The read takes its schema from the record
+    and starts no Spark job; a table with no record falls back to
+    ``mergeSchema`` inference. Reading the record under the same lock hold
+    as the roll-forward means it always describes the buckets the read
+    lists, and is never read half-published.
+
+    Lock discipline (ADVICE r9): if the calling thread already holds the
+    path's lock (every ingest path calls read_state inside its locked
+    section), heal directly under the caller's lock; re-acquiring the
+    non-reentrant O_EXCL lock would raise StateLockError against the
+    caller's own fence. A lock-free read takes
     the lock UNCONDITIONALLY and heals under it, so a live publish makes the
     read raise ``StateLockError`` instead of planning over a half-swapped
     directory. Residual TOCTOU, by design: the lock is released before the
@@ -315,22 +398,14 @@ def read_state(
     harness."""
     with _own_lock(path):
         recover_bucket_swap(path)
-    try:
-        # mergeSchema: after a T4 widening, buckets written before the ALTER
-        # have fewer columns than buckets written after — union their schemas
-        # (footer-read cost is per-file and parallel; state files are few per
-        # bucket by construction)
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-    except Exception:
-        return None  # first batch: no state yet
+        df = _read_table(spark, path)
+    if df is None:
+        return None
     if BUCKET_COL in df.columns:
         if buckets is not None:
             df = df.filter(F.col(BUCKET_COL).isin(buckets))
         df = df.drop(BUCKET_COL)
     return df
-
-
-_SWAP_JOURNAL = "_state_swap_journal.json"
 
 
 def write_state(
@@ -339,9 +414,14 @@ def write_state(
     key_buckets: int | None = None,
     key_cols: tuple[str, ...] = DEFAULT_KEY,
 ) -> None:
-    """Materialize state. Without ``key_buckets``: a plain overwrite of the
-    whole table. With ``key_buckets``: the crash-atomic bucket publish — the
-    table is laid out as ``__bucket=K`` partition directories keyed on
+    """Materialize state and record its schema. Without ``key_buckets``: a
+    plain overwrite of the whole table, then the schema record. The
+    overwrite deletes the table directory, record included, before it
+    writes, so a crash before the new record lands leaves a table read by
+    inference, never a stale record.
+
+    With ``key_buckets``: the crash-atomic bucket publish — the table is
+    laid out as ``__bucket=K`` partition directories keyed on
     ``pmod(xxhash64(key), N)`` (the unit of incremental rewrite), and ONLY
     the buckets present in ``state`` are replaced; every other bucket
     directory is left byte-identical. On Delta this becomes MERGE + OPTIMIZE.
@@ -352,16 +432,21 @@ def write_state(
     Protocol (same journal discipline as ``layout.optimize_clustered``;
     the ReplacingMergeTree part swap, per bucket): (1) write the buckets'
     COMPLETE new state to a sibling staging dir; (2) fsync-publish a journal
-    naming the staged bucket dirs; (3) swap each bucket directory in with
-    rmtree+rename — rename is atomic, so every bucket is either wholly old
-    or wholly new at all times; (4) clear the journal and staging dir. A
-    crash in (1) leaves an orphan staging dir and the old state intact; a
-    crash in (3) is rolled forward by ``recover_bucket_swap`` (which
-    ``read_state`` runs), so a replayed batch always merges into committed
-    state, never into an emptied bucket. Runs under the path's state lock,
-    reusing it if the calling thread already holds it."""
+    naming the staged bucket dirs and the table's new schema
+    (``_table_schema`` of the staged frame over the current table, whose
+    schema comes from its record, or is inferred once if it has none); (3)
+    ``recover_bucket_swap`` runs the journal: it swaps each bucket directory
+    in with rmtree+rename — rename is atomic, so every bucket is either
+    wholly old or wholly new at all times — records the schema, and clears
+    the journal and staging dir. A crash in (1) leaves an orphan staging dir
+    and the old state intact; a crash in (3) leaves the journal, which the
+    next ``recover_bucket_swap`` (``read_state`` runs it) replays, so a
+    replayed batch always merges into committed state, never into an
+    emptied bucket. Runs under the path's state lock, reusing it if the
+    calling thread already holds it."""
     if not key_buckets:
         state.write.mode("overwrite").parquet(path)
+        _publish_json(os.path.join(path, _SCHEMA_RECORD), _table_schema(state, None))
         return
     staged_root = f"{os.path.abspath(path)}.staged"
     with _own_lock(path):
@@ -371,6 +456,11 @@ def write_state(
             if BUCKET_COL in state.columns
             else state.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets))
         )
+        prev = _recorded_schema(path)
+        if prev is None:  # a table from before the record: infer its schema once
+            table = _read_table(out.sparkSession, path)
+            prev = None if table is None else table.drop(BUCKET_COL).schema
+        schema = _table_schema(out, prev)
         (
             out.repartition(_publish_partitions(out.sparkSession, key_buckets), BUCKET_COL)
             .write.mode("overwrite")
@@ -381,32 +471,29 @@ def write_state(
             d for d in os.listdir(staged_root) if d.startswith(f"{BUCKET_COL}=")
         )
         os.makedirs(path, exist_ok=True)
-        journal = os.path.join(path, _SWAP_JOURNAL)
-        tmp_journal = journal + ".tmp"
-        with open(tmp_journal, "w") as fh:
-            json.dump({"buckets": bucket_dirs, "staged": staged_root}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp_journal, journal)
-        for bucket_dir in bucket_dirs:
-            dst = os.path.join(path, bucket_dir)
-            if os.path.isdir(dst):
-                shutil.rmtree(dst)
-            os.rename(os.path.join(staged_root, bucket_dir), dst)
-        os.remove(journal)
-        shutil.rmtree(staged_root, ignore_errors=True)
+        _publish_json(
+            os.path.join(path, _SWAP_JOURNAL),
+            {"buckets": bucket_dirs, "staged": staged_root, "schema": schema},
+        )
+        recover_bucket_swap(path)
 
 
 def recover_bucket_swap(path: str) -> bool:
-    """Finish a ``write_state`` bucket swap interrupted by a crash.
+    """Run a journaled ``write_state`` bucket swap: ``write_state`` calls
+    this right after it publishes the journal, and every reader and writer
+    calls it first, so a swap a crash interrupted is finished by the same
+    code.
 
     The journal is written only AFTER the staged write is complete, so
-    recovery always rolls FORWARD: any journaled bucket still present in
+    the swap always rolls FORWARD: any journaled bucket still present in
     the staged dir replaces its table directory (rmtree + rename — the
     rename is atomic per bucket); buckets already swapped are skipped.
-    Returns True if a torn swap was healed. Callers must hold the state
-    lock. An orphan staging dir with NO journal (crash mid-staged-write)
-    is deleted — the old state is intact and the batch replays."""
+    Then the journaled schema replaces the schema record; a journal with
+    no schema (written before the record existed) removes the record, so
+    the table is read by inference. Returns True if a journal was run.
+    Callers must hold the state lock. An orphan staging dir with NO journal
+    (crash mid-staged-write) is deleted — the old state is intact and the
+    batch replays."""
     journal = os.path.join(path, _SWAP_JOURNAL)
     staged_root = f"{os.path.abspath(path)}.staged"
     if not os.path.exists(journal):
@@ -422,6 +509,12 @@ def recover_bucket_swap(path: str) -> bool:
             if os.path.isdir(dst):
                 shutil.rmtree(dst)
             os.rename(src, dst)
+    record = os.path.join(path, _SCHEMA_RECORD)
+    if "schema" in entry:
+        _publish_json(record, entry["schema"])
+    else:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(record)
     os.remove(journal)
     shutil.rmtree(entry["staged"], ignore_errors=True)
     return True
@@ -444,9 +537,10 @@ def upsert_changes_bucketed(
     ``README.md:59-62``); on Delta it is ``MERGE INTO`` and the bucket
     machinery disappears.
 
-    Steps: (1) bucket the batch keys and collect the distinct bucket ids —
-    driver-side but bounded by ``key_buckets``, never by data; (2) read ONLY
-    those bucket partitions (partition-pruned scan); (3) arg-max merge of
+    Steps: (1) bucket the batch keys and observe the set of bucket ids
+    (``_touched_buckets``: one job, bounded by ``key_buckets``, never by
+    data); (2) read ONLY those bucket partitions (partition-pruned scan,
+    schema from the commit's record); (3) arg-max merge of
     state and batch; (4) the journaled bucket swap of ``write_state``
     publishes exactly the touched buckets, crash-atomically: it stages the
     buckets before it swaps any of them, so the write never reads a

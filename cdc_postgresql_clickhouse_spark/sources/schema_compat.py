@@ -15,9 +15,12 @@ Semantics follow the registry's JSON/Avro rules:
   old readers missing a value they rely on.
 - FULL      = both.
 - Type changes: a WIDENING numeric promotion (int -> long, float ->
-  double, and int/long -> double) is compatible both ways here because
-  the state layer reads through ``mergeSchema`` which applies the same
-  promotions; any other type change is breaking in both directions.
+  double, and int/long -> double) is compatible both ways here, as in the
+  registry; any other type change is breaking in both directions. The
+  bucketed state does not apply a promotion in place: each commit records
+  the table's schema merged by name with Spark's schema merge
+  (``operators.state.write_state``), which rejects a changed type, so a
+  promoted column needs its state table rewritten.
 """
 
 from __future__ import annotations

@@ -101,7 +101,8 @@ def run_cdc_pipeline(
     by RESTARTING the pipeline with the schema re-derived from the
     schema-change history (``sources.schema_changes.envelope_schema_for``)
     and the new columns listed in ``extra_image_columns``; the bucketed
-    state widens on merge (mergeSchema + allowMissingColumns), pre-ALTER
+    state widens on merge (allowMissingColumns, and the commit's schema
+    record gains the new column — ``operators.state.write_state``), pre-ALTER
     rows reading NULL — ClickHouse ``ADD COLUMN`` semantics.
     """
     reader = spark.readStream.schema(with_corrupt_record(envelope_schema or ENVELOPE_SCHEMA))

@@ -282,6 +282,7 @@ def test_direct_read_state_heals_torn_journaled_swap(spark, sf_dir):
     import json
 
     from cdc_postgresql_clickhouse_spark.operators.state import (
+        _SCHEMA_RECORD,
         _SWAP_JOURNAL,
         read_state,
     )
@@ -292,6 +293,9 @@ def test_direct_read_state_heals_torn_journaled_swap(spark, sf_dir):
         state = os.path.join(tmp, "state")
         ingest_batch_ewma(spark, ev, state, batch_id=0)
         want = _fold_canon(read_ewma(spark, state))
+        record = os.path.join(state, _SCHEMA_RECORD)
+        assert os.path.exists(record)
+        columns = read_state(spark, state).columns
 
         # tear the swap: move one bucket back into a staging root, delete
         # its table dir, and journal the pending swap (the exact on-disk
@@ -308,9 +312,13 @@ def test_direct_read_state_heals_torn_journaled_swap(spark, sf_dir):
             json.dump({"buckets": [torn], "staged": staged}, fh)
 
         # a direct read (no fold wrapper, no prior recover call) must heal:
-        # full state back, journal and staging dir gone
+        # full state back, journal and staging dir gone. The journal has no
+        # schema (the format from before the schema record existed), so the
+        # roll-forward removes the record and the table is read by inference
         healed = read_state(spark, state)
         assert healed is not None
+        assert not os.path.exists(record)
+        assert healed.columns == columns
         got = _fold_canon(
             healed.select(
                 "user_id", "n_events",
@@ -504,10 +512,12 @@ def test_read_from_another_thread_hits_the_lock_not_the_swap(spark, sf_dir):
     """Lock ownership is per thread. foreachBatch runs on a callback thread,
     so a read on the caller's thread while a batch holds the lock must raise
     StateLockError. It must not treat the batch's lock as its own and roll
-    the live journal forward under the batch's bucket swap."""
+    the live journal forward under the batch's bucket swap, nor read the
+    schema record the swap is rewriting: the record is read under the lock."""
     import threading
 
     from cdc_postgresql_clickhouse_spark.operators.state import (
+        _SCHEMA_RECORD,
         _SWAP_JOURNAL,
         StateLockError,
         _state_lock,
@@ -520,17 +530,27 @@ def test_read_from_another_thread_hits_the_lock_not_the_swap(spark, sf_dir):
         state = os.path.join(tmp, "state")
         ingest_batch_ewma(spark, ev, state, batch_id=0)
         torn, staged = _tear_one_bucket(state)  # a swap in flight
+        record = os.path.join(state, _SCHEMA_RECORD)
         held, release = threading.Event(), threading.Event()
 
         def batch() -> None:
             with _state_lock(state):
+                # the record of the swap in flight, caught half-written
+                with open(record) as fh:
+                    whole = fh.read()
+                with open(record, "w") as fh:
+                    fh.write(whole[: len(whole) // 2])
                 held.set()
                 release.wait(30)
+                with open(record, "w") as fh:
+                    fh.write(whole)
 
         t = threading.Thread(target=batch)
         t.start()
         try:
             assert held.wait(30)
+            # the record is read under the lock, so the reader stops at the
+            # lock and never parses the half-written record
             with pytest.raises(StateLockError):
                 read_state(spark, state)
             # the in-flight swap was left alone
@@ -671,20 +691,23 @@ def _arm_crash(m, point: str) -> list:
             real_rename(src, dst)
 
         m.setattr(state_mod.os, "rename", rename)
-    else:  # "pre_journal": the staged write finished, the journal never lands
+    else:
+        # "pre_journal": the staged write finished, the journal never lands;
+        # "pre_record": every bucket is swapped, the schema record never lands
+        target = state_mod._SWAP_JOURNAL if point == "pre_journal" else state_mod._SCHEMA_RECORD
         real_replace = os.replace
 
         def replace(src, dst):
-            if str(dst).endswith(state_mod._SWAP_JOURNAL):
+            if str(dst).endswith(target):
                 fired.append(dst)
-                raise _InjectedCrash("injected crash before the journal publish")
+                raise _InjectedCrash(f"injected crash before publishing {target}")
             real_replace(src, dst)
 
         m.setattr(state_mod.os, "replace", replace)
     return fired
 
 
-@pytest.mark.parametrize("point", ["mid_swap", "pre_journal"])
+@pytest.mark.parametrize("point", ["mid_swap", "pre_journal", "pre_record"])
 @pytest.mark.parametrize(
     "writer", [_golden_pipeline, _scd2_writer, _mv_writer], ids=["pipeline", "scd2", "mv_keys"]
 )
@@ -692,13 +715,20 @@ def test_crash_inside_bucket_swap_replays_to_uncrashed_state(
     spark, tmp_path, monkeypatch, writer, point
 ):
     """Kill the second micro-batch inside its bucket publish — after the
-    first bucket rename (a torn swap, journal on disk) or before the
-    journal is published (an orphan staging dir) — then restart on the
-    same checkpoint: the replayed batch must land on exactly the state an
-    uncrashed run reaches, with no older key of a swapped bucket lost."""
+    first bucket rename (a torn swap, journal on disk), before the journal
+    is published (an orphan staging dir), or after every rename but before
+    the schema record is replaced (journal on disk) — then restart on the
+    same checkpoint: the replayed batch must land on exactly the state and
+    the schema record an uncrashed run reaches, with no older key of a
+    swapped bucket lost."""
+    import json
+
     from pyspark.errors import StreamingQueryException
 
-    from cdc_postgresql_clickhouse_spark.operators.state import _SWAP_JOURNAL
+    from cdc_postgresql_clickhouse_spark.operators.state import (
+        _SCHEMA_RECORD,
+        _SWAP_JOURNAL,
+    )
 
     add, drain, final, table = writer(spark, str(tmp_path))
     state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
@@ -714,7 +744,7 @@ def test_crash_inside_bucket_swap_replays_to_uncrashed_state(
     staged = f"{os.path.abspath(table(state))}.staged"
     journal = os.path.join(table(state), _SWAP_JOURNAL)
     assert os.path.isdir(staged)
-    assert os.path.exists(journal) == (point == "mid_swap")
+    assert os.path.exists(journal) == (point != "pre_journal")
 
     drain(state, ckpt)  # restart: batch 1 replays on the same checkpoint
     assert not os.path.exists(journal) and not os.path.exists(staged)
@@ -722,3 +752,9 @@ def test_crash_inside_bucket_swap_replays_to_uncrashed_state(
     control = str(tmp_path / "control")
     drain(control, str(tmp_path / "control_ckpt"))
     assert final(state) == final(control)
+
+    def record(root):
+        with open(os.path.join(table(root), _SCHEMA_RECORD)) as fh:
+            return json.load(fh)
+
+    assert record(state) == record(control)

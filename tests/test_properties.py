@@ -230,6 +230,48 @@ def test_argmax_equals_row_number_window(spark, rows, n_dups, split):
     assert _bag(current_state(df, keys, versions)) == _bag(live.drop("is_deleted", "ts_ms"))
 
 
+@given(
+    keys=st.lists(
+        st.tuples(st.integers(-50, 50), st.one_of(st.none(), st.text(max_size=3))),
+        max_size=20,
+    ),
+    n_buckets=st.integers(min_value=1, max_value=8),
+    two_cols=st.booleans(),
+)
+@example(keys=[], n_buckets=4, two_cols=False)
+@PROP_SETTINGS
+def test_touched_buckets_equals_distinct_collect(spark, keys, n_buckets, two_cols):
+    """``_touched_buckets`` (a set observed during one scan) returns the
+    sorted distinct bucket ids the ``distinct().collect()`` reference finds,
+    for 1- and 2-column keys and for the empty frame."""
+    from cdc_postgresql_clickhouse_spark.operators.state import (
+        _bucket_expr,
+        _touched_buckets,
+    )
+
+    df = spark.createDataFrame(keys, "k1 long, k2 string")
+    key_cols = ("k1", "k2") if two_cols else ("k1",)
+    ref = df.select(_bucket_expr(key_cols, n_buckets)).distinct().collect()
+    assert _touched_buckets(df, key_cols, n_buckets) == sorted(r[0] for r in ref)
+
+
+def test_touched_buckets_runs_one_job(spark):
+    """The touched-bucket set costs one Spark job and no shuffle: the scan
+    tasks build it in accumulators (``distinct().collect()`` ran two jobs)."""
+    from cdc_postgresql_clickhouse_spark.operators.state import _touched_buckets
+
+    df = spark.createDataFrame([(f"b{i}",) for i in range(200)], "booking_id string")
+    sc = spark.sparkContext
+    group = "touched-buckets-one-job"
+    sc.setJobGroup(group, group)
+    try:
+        touched = _touched_buckets(df, ("booking_id",), 16)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert touched == list(range(16))
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_lsh_tuning_report_amplification_monotonicity(spark, sf_dir):
     """Aligned band refinements nest: a (2x6) bucket match implies both
     constituent (4x3) matches, and a (6x2) match implies both (12x1)

@@ -152,6 +152,58 @@ def test_widening_through_bucketed_state(spark, tmp_path):
     assert rows["b1"]["note"] is None and rows["b2"]["note"] == "vip"
 
 
+def test_schema_record_equals_inference_and_reads_with_no_job(spark, tmp_path):
+    """The schema each commit records is the schema ``mergeSchema``
+    inference gives (names, order, types, nullability) after a plain
+    publish and after a T4 widening batch that rewrites one bucket only;
+    untouched buckets read the new column as NULL, and ``read_state`` plus
+    ``.schema`` starts no Spark job."""
+    from cdc_postgresql_clickhouse_spark.operators.state import (
+        _bucket_expr,
+        read_state,
+        upsert_changes_bucketed,
+        write_state,
+    )
+
+    path = str(tmp_path / "state")
+    base = "booking_id string, version long, ts_ms long, is_deleted int, status string"
+    write_state(
+        spark.createDataFrame([(f"b{i}", 1, 0, 0, "Open") for i in range(40)], base),
+        path,
+        key_buckets=4,
+    )
+
+    def check() -> None:
+        inferred = spark.read.option("mergeSchema", "true").parquet(path).drop("__bucket")
+        sc = spark.sparkContext
+        group = f"record-read-{tmp_path.name}"
+        sc.setJobGroup(group, group)
+        try:
+            recorded = read_state(spark, path).schema
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+        def shape(schema):
+            return [(f.name, f.dataType, f.nullable) for f in schema.fields]
+
+        assert shape(recorded) == shape(inferred.schema)
+
+    check()
+    widened = spark.createDataFrame(
+        [("b1", 2, 0, 0, "Open", "vip")], f"{base}, note string"
+    )
+    upsert_changes_bucketed(spark, widened, path, key_buckets=4)
+    check()
+    bucket = _bucket_expr(("booking_id",), 4)
+    final = read_state(spark, path).withColumn("bk", bucket)
+    (b1_bucket,) = [r.bk for r in final.filter("booking_id = 'b1'").collect()]
+    untouched = final.filter(F.col("bk") != b1_bucket)
+    assert untouched.count() > 0
+    assert untouched.filter(F.col("note").isNotNull()).count() == 0
+    assert [r.note for r in final.filter("booking_id = 'b1'").collect()] == ["vip"]
+
+
 def test_widening_through_streaming_pipeline_restart(spark, tmp_path):
     """T4 end-to-end through run_cdc_pipeline: pre-ALTER batch runs with the
     base schema; the DDL event re-derives the envelope schema; the RESTARTED
