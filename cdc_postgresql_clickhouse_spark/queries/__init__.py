@@ -74,46 +74,46 @@ _MODULES = (
 # module order and is re-verified locally by scripts/parity_sweep.py.
 _WINDOW_FRONT = [
     # rule 1: cdc insurance, 2 slots: the flagship current-state read plus
-    # one rotating CDC row (r14 rotation: cdc_dlq_report — at r7 the oldest
-    # cdc driver proof, so the insurance slot doubles as the cdc family's
-    # staleness re-check; cdc_state_asof rotated out after its r13 green).
-    "cdc_current_state", "cdc_dlq_report",
-    # rule 2: the never-driver-checked queue is EMPTY (all 418 registered
-    # queries have at least one driver proof; r14 is an optimization round
-    # and registers no new queries).
+    # one rotating cdc row (r15 rotation: cdc_soft_delete_state — last
+    # green r8, the oldest cdc proof, first of the r8 cdc rows in
+    # registration order, so the insurance slot doubles as the cdc family's
+    # staleness re-check; cdc_dlq_report rotated out after its r14 green).
+    "cdc_current_state", "cdc_soft_delete_state",
+    # rules 2 and 2b: EMPTY — every registered query has a driver proof and
+    # no query's latest driver row is red.
     # rule 3 (staleness): the remaining 48 slots fill with already-green
-    # rows whose latest driver proof is OLDEST — the full 11-row r3-latest
-    # cohort (after this round no row's proof predates r4), then the first
-    # 37 of the 41-row r4-latest cohort in registration order. The 4 r4
-    # rows left behind (corpus_dsir_weights, ann_pq_topk,
-    # multimodal_audio_frames, multimodal_phash_neardup) front the r15
-    # window and stay within the MAX_PROOF_AGE=10 bound at r14.
-    # tests/test_window_policy.py pins the rule and the bound.
-    "skew_salted_revenue_by_status", "skew_distinct_parts_per_supplier",
-    "debezium_decimal_decode", "hstore_props_map",
-    "funnel_windowed", "retention_weekly",
-    "sequence_match_clean_purchase", "grouped_topk_event_values",
-    "events_error_blast_radius", "sketch_distinct_users",
-    "events_purchase_attribution",
-    "streaming_incremental_dedup", "streaming_minhash_neardup",
-    "streaming_tumbling_equiv", "streaming_late_data_drop",
-    "streaming_session_equiv", "streaming_ivf_ingest_equiv",
-    "streaming_postings_ingest_equiv", "streaming_cdc_pipeline_equiv",
-    "text_winnowing_fingerprints", "doc_chunking",
-    "chunk_dedup_content_defined", "embedding_semantic_cluster",
-    "text_langid_chargram", "text_pii_redact",
-    "text_html_strip", "text_ccnet_buckets",
-    "corpus_version_diff", "events_transition_matrix",
-    "dedup_cluster_size_hist", "dedup_soft_weights",
-    "dedup_exact_substring", "dedup_lines",
-    "corpus_training_manifest", "corpus_temperature_mixture",
-    "sketch_kmv_distinct", "events_user_ewma",
-    "sketch_hll_distinct", "sketch_cms_heavy_hitters",
-    "sketch_kmv_union", "layout_zorder_clustering",
-    "bpe_train_merges", "bpe_token_count",
-    "graph_pagerank_types", "graph_sssp_types",
-    "graph_triangle_types", "text_bm25_search",
-    "retrieval_hybrid_rrf",
+    # non-cdc rows whose latest driver proof is OLDEST, oldest round first,
+    # registration order within a round: the 4 r4-latest rows, all 39
+    # r6-latest rows, then the first 5 of the 38 r7-latest rows. The 33 r7
+    # rows left behind front the r16 window. Once the driver stamps this
+    # window the oldest proof is r7, so MAX_PROOF_AGE = 10 holds through a
+    # round-17 stamp. tests/test_window_policy.py pins the rule and the
+    # bound.
+    "corpus_dsir_weights", "ann_pq_topk",
+    "multimodal_audio_frames", "multimodal_phash_neardup",
+    "streaming_hll_equiv", "streaming_quantile_equiv",
+    "streaming_cms_equiv", "streaming_topk_equiv",
+    "streaming_scd2_equiv", "text_repetition_topgram",
+    "text_bigram_logprob", "quality_langid_confusion",
+    "events_anomaly_mad", "sketch_quantile_bottomk",
+    "sketch_quantile_merge", "sketch_quantile_error_report",
+    "layout_hilbert_clustering", "tokenizer_unigram_segment",
+    "tokenizer_unigram_token_count", "graph_kcore_types",
+    "graph_label_propagation", "graph_degree_profile",
+    "retrieval_known_item_eval", "dedup_minhash_containment",
+    "dedup_lsh_tuning_report", "ann_ivfpq_topk",
+    "ann_recall_report", "retrieval_label_knn_eval",
+    "embedding_pca_topcomponent", "quality_threshold_sweep",
+    "text_readability", "corpus_decontaminate_bloom",
+    "corpus_split_leakage_report", "corpus_length_pareto",
+    "corpus_vocab_growth", "events_minute_gapfill",
+    "events_minute_locf", "events_top_paths",
+    "events_rolling_median", "source_jsonl_roundtrip_agg",
+    "source_csv_roundtrip_agg", "source_orc_roundtrip_agg",
+    "grouping_sets_order_profile",
+    "streaming_ewma_equiv", "streaming_retraction_mv_equiv",
+    "streaming_session_capped_equiv", "text_char_entropy",
+    "corpus_bigram_heldout_ppl",
 ]
 
 
