@@ -13,8 +13,11 @@ memory, which is the 100 TB posture. Two equivalent consumption modes:
 
 1. ``current_state`` — read-time dedup view (the ``FINAL`` analogue, R1):
    arg-max per key as one aggregation, ``max(struct(total order))`` grouped
-   by the key. Single hash-partition shuffle on the key; at scale the input
-   is pre-bucketed by key so the shuffle is a no-op.
+   by the key, one shuffle on the key. ``FINAL`` skips its merge once a
+   partition is down to one part; likewise a table whose commit records
+   that it holds one row per key (``unique_key`` in the schema record,
+   written by ``upsert_changes_bucketed``) is read with no arg-max at all,
+   only the soft-delete filter.
 2. ``apply_changes`` — batch/micro-batch upsert that materializes the merged
    state (the background-merge analogue). On Delta this is ``MERGE INTO``;
    on plain parquet we implement merge-by-rewrite: union(state, updates) →
@@ -184,6 +187,17 @@ def _argmax_per_key(
     )
 
 
+# The attribute ``read_state`` sets on the frame it returns when the table's
+# commit records one row per key: the key columns. It lives on that one
+# Python object, not in the plan, so every derived frame lacks it.
+_UNIQUE_KEY_ATTR = "_unique_key"
+
+
+def _unique_key(df: DataFrame) -> tuple[str, ...] | None:
+    # vars(): a DataFrame's attribute lookup falls back to its columns
+    return vars(df).get(_UNIQUE_KEY_ATTR)
+
+
 def current_state(
     updates: DataFrame,
     key_cols: tuple[str, ...] = DEFAULT_KEY,
@@ -195,8 +209,20 @@ def current_state(
 
     Arg-max per key over the total version order (``_argmax_per_key``: one
     aggregation, one shuffle by key), then the soft-delete filter.
+
+    ``FINAL`` skips its merge on a partition already merged to one part.
+    Here the arg-max is skipped when ``updates`` is the very frame
+    ``read_state`` returned for a table whose commit records one row per a
+    subset of ``key_cols`` (``_unique_key``): each key's one row is its
+    winner, so only the soft-delete filter runs. A frame derived from it
+    (filtered, selected, unioned) carries no record and takes the arg-max.
     """
-    out = _argmax_per_key(updates, key_cols, version_cols).filter(F.col(deleted_col) == 0)
+    unique = _unique_key(updates)
+    if unique is not None and set(unique) <= set(key_cols):
+        out = updates
+    else:
+        out = _argmax_per_key(updates, key_cols, version_cols)
+    out = out.filter(F.col(deleted_col) == 0)
     if not keep_internal:
         out = out.drop(deleted_col, "ts_ms")
     return out
@@ -306,7 +332,10 @@ _SWAP_JOURNAL = "_state_swap_journal.json"
 # The table's schema, recorded at every commit (the analogue of the
 # columns.txt a ReplacingMergeTree part keeps next to its data), so a read
 # never scans files to learn the table's shape. The leading "_" keeps it,
-# like the journal, out of Spark's file index.
+# like the journal, out of Spark's file index. A table that holds one row
+# per key also records that key and its bucket count next to the schema's
+# fields ("unique_key", "key_buckets"; see ``write_state``). A file added
+# to the table other than through ``write_state`` is covered by neither.
 _SCHEMA_RECORD = "_state_schema.json"
 
 
@@ -321,17 +350,17 @@ def _publish_json(dst: str, obj) -> None:
     os.replace(tmp, dst)
 
 
-def _recorded_schema(path: str) -> StructType | None:
-    """The data schema recorded for the table at ``path``, or None if it
-    has no record."""
+def _record(path: str) -> dict | None:
+    """The schema record of the table at ``path`` (a ``StructType`` JSON,
+    plus the unique key if one is recorded), or None if it has none."""
     try:
         with open(os.path.join(path, _SCHEMA_RECORD)) as fh:
-            return StructType.fromJson(json.load(fh))
+            return json.load(fh)
     except (FileNotFoundError, NotADirectoryError):
         return None
 
 
-def _read_table(spark: SparkSession, path: str) -> DataFrame | None:
+def _read_table(spark: SparkSession, path: str, record: dict | None) -> DataFrame | None:
     """The table at ``path``, ``__bucket`` included, or None if there is
     none. With a schema record the read takes its schema from the record
     and starts no Spark job. A table with no record (written before the
@@ -341,8 +370,11 @@ def _read_table(spark: SparkSession, path: str) -> DataFrame | None:
     read, in one parallel job, and their schemas are unioned."""
     if not os.path.exists(path):
         return None  # first batch: no state yet
-    record = _recorded_schema(path)
-    reader = spark.read.option("mergeSchema", "true") if record is None else spark.read.schema(record)
+    reader = (
+        spark.read.option("mergeSchema", "true")
+        if record is None
+        else spark.read.schema(StructType.fromJson(record))
+    )
     try:
         return reader.parquet(path)
     except Exception:
@@ -382,7 +414,9 @@ def read_state(
     and starts no Spark job; a table with no record falls back to
     ``mergeSchema`` inference. Reading the record under the same lock hold
     as the roll-forward means it always describes the buckets the read
-    lists, and is never read half-published.
+    lists, and is never read half-published. If the record holds a unique
+    key, it is attached to the returned frame (``_unique_key``), so
+    ``current_state`` of that frame skips the arg-max.
 
     Lock discipline (ADVICE r9): if the calling thread already holds the
     path's lock (every ingest path calls read_state inside its locked
@@ -398,13 +432,16 @@ def read_state(
     harness."""
     with _own_lock(path):
         recover_bucket_swap(path)
-        df = _read_table(spark, path)
+        record = _record(path)
+        df = _read_table(spark, path, record)
     if df is None:
         return None
     if BUCKET_COL in df.columns:
         if buckets is not None:
             df = df.filter(F.col(BUCKET_COL).isin(buckets))
         df = df.drop(BUCKET_COL)
+    if record is not None and "unique_key" in record:
+        setattr(df, _UNIQUE_KEY_ATTR, tuple(record["unique_key"]))
     return df
 
 
@@ -413,6 +450,7 @@ def write_state(
     path: str,
     key_buckets: int | None = None,
     key_cols: tuple[str, ...] = DEFAULT_KEY,
+    one_row_per_key: bool = False,
 ) -> None:
     """Materialize state and record its schema. Without ``key_buckets``: a
     plain overwrite of the whole table, then the schema record. The
@@ -443,7 +481,16 @@ def write_state(
     next ``recover_bucket_swap`` (``read_state`` runs it) replays, so a
     replayed batch always merges into committed state, never into an
     emptied bucket. Runs under the path's state lock, reusing it if the
-    calling thread already holds it."""
+    calling thread already holds it.
+
+    ``one_row_per_key``: the caller states that ``state`` holds at most one
+    row per ``key_cols``. The bucket publish then records ``key_cols`` as
+    the table's ``unique_key`` (with ``key_buckets``) in the journaled
+    schema, but only if the table had no data before or its record already
+    held the same key and bucket count: the publish keeps every bucket it
+    does not rewrite, and a key's row stays in one bucket only while the
+    key and bucket count stay the same. Any other write leaves the table
+    with no recorded key, so its reads run the arg-max."""
     if not key_buckets:
         state.write.mode("overwrite").parquet(path)
         _publish_json(os.path.join(path, _SCHEMA_RECORD), _table_schema(state, None))
@@ -456,11 +503,16 @@ def write_state(
             if BUCKET_COL in state.columns
             else state.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets))
         )
-        prev = _recorded_schema(path)
-        if prev is None:  # a table from before the record: infer its schema once
-            table = _read_table(out.sparkSession, path)
+        record = _record(path)
+        if record is None:  # a table from before the record: infer its schema once
+            table = _read_table(out.sparkSession, path, None)
             prev = None if table is None else table.drop(BUCKET_COL).schema
+        else:
+            prev = StructType.fromJson(record)
         schema = _table_schema(out, prev)
+        layout = {"unique_key": list(key_cols), "key_buckets": key_buckets}
+        if one_row_per_key and (prev is None or layout.items() <= (record or {}).items()):
+            schema.update(layout)  # prev is None: the table has no data yet
         (
             out.repartition(_publish_partitions(out.sparkSession, key_buckets), BUCKET_COL)
             .write.mode("overwrite")
@@ -488,10 +540,10 @@ def recover_bucket_swap(path: str) -> bool:
     the swap always rolls FORWARD: any journaled bucket still present in
     the staged dir replaces its table directory (rmtree + rename — the
     rename is atomic per bucket); buckets already swapped are skipped.
-    Then the journaled schema replaces the schema record; a journal with
-    no schema (written before the record existed) removes the record, so
-    the table is read by inference. Returns True if a journal was run.
-    Callers must hold the state lock. An orphan staging dir with NO journal
+    Then the journaled schema, with its unique key if it has one, replaces
+    the schema record; a journal with no schema (written before the record
+    existed) removes the record, so the table is read by inference.
+    Returns True if a journal was run. Callers must hold the state lock. An orphan staging dir with NO journal
     (crash mid-staged-write) is deleted — the old state is intact and the
     batch replays."""
     journal = os.path.join(path, _SWAP_JOURNAL)
@@ -546,7 +598,9 @@ def upsert_changes_bucketed(
     buckets before it swaps any of them, so the write never reads a
     directory it is replacing, and a replayed batch after a crash at any
     step merges into committed state again, where the arg-max makes it a
-    no-op for changes already applied.
+    no-op for changes already applied. The merged frame is one row per
+    key, and the publish records that (``one_row_per_key``), so
+    ``current_state(read_state(path))`` runs no arg-max.
 
     One shuffle: the union of state and batch gets its ``__bucket`` column
     and is repartitioned by it into ``_publish_partitions`` tasks; the
@@ -569,7 +623,9 @@ def upsert_changes_bucketed(
             _publish_partitions(spark, key_buckets), BUCKET_COL
         )
         merged = apply_changes(None, union, (BUCKET_COL, *key_cols), version_cols)
-        write_state(merged, path, key_buckets=key_buckets, key_cols=key_cols)
+        write_state(
+            merged, path, key_buckets=key_buckets, key_cols=key_cols, one_row_per_key=True
+        )
     return touched
 
 
@@ -592,11 +648,16 @@ def compact_state(
     deleted) before the temp is renamed in — no step ever deletes the only
     complete copy, so a crash at any point leaves either the old or the new
     state recoverable on disk. On Delta this maps to OPTIMIZE + ZORDER, is
-    ACID, and needs no coordination."""
+    ACID, and needs no coordination.
+
+    A table whose record holds a unique key is rebucketed on that key and
+    keeps it (the rows are the same, so they are still one per key); any
+    other table is rebucketed on ``booking_id`` and records no key."""
     with _state_lock(path):
         state = read_state(spark, path)
         if state is None:
             return
+        unique = _unique_key(state)
         tmp = f"{path}.compact-tmp"
         old = f"{path}.compact-old"
         # the bucket publish keeps buckets it does not rewrite, so a crashed
@@ -604,7 +665,13 @@ def compact_state(
         # its lock can only be a crashed compaction's (we hold path's lock)
         shutil.rmtree(tmp, ignore_errors=True)
         break_state_lock(tmp, force=True)
-        write_state(state.localCheckpoint(eager=True), tmp, key_buckets=key_buckets)
+        write_state(
+            state.localCheckpoint(eager=True),
+            tmp,
+            key_buckets=key_buckets,
+            key_cols=unique or DEFAULT_KEY,
+            one_row_per_key=unique is not None,
+        )
         shutil.rmtree(old, ignore_errors=True)
         os.rename(path, old)
         os.rename(tmp, path)  # crash before this: complete copies at both tmp+old
@@ -712,7 +779,10 @@ def state_table_stats(spark: SparkSession, path: str) -> dict:
     upsert rewrites each touched bucket wholesale, so healthy tables sit
     at one file per bucket). Walks the directory tree driver-side —
     metadata-cadence work, like the reference's system-table queries —
-    and reads NO data files except one count() over the table."""
+    and reads NO data files except one count() over the table.
+    ``unique_key`` is the key the table's commit records it holds one row
+    per (None if it records none): reads of a table with one skip the
+    arg-max (``current_state``)."""
     import os
 
     buckets: dict[str, int] = {}
@@ -737,4 +807,5 @@ def state_table_stats(spark: SparkSession, path: str) -> dict:
         "total_bytes": total_bytes,
         "max_files_per_bucket": per_bucket[-1] if per_bucket else 0,
         "min_files_per_bucket": per_bucket[0] if per_bucket else 0,
+        "unique_key": None if df is None else _unique_key(df),
     }

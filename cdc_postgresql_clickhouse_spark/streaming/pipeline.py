@@ -24,7 +24,9 @@ plan (survey §3.1):
   is wholly old or wholly new, as a ReplacingMergeTree part swap is. A
   crash at any step leaves the committed state recoverable (a torn swap is
   rolled forward by the next ``read_state``), and the replayed batch merges
-  into it idempotently.
+  into it idempotently. The commit also records that the table holds one
+  row per key, so ``current_state(read_state(state_path))`` — the
+  ``FINAL`` read — runs no arg-max.
 - Stateless incremental view maintenance (ST1): the transform has no
   aggregation, so Spark keeps **no** streaming state; per-key state lives in
   the state table itself (ST3), the 100 TB posture.
@@ -82,8 +84,11 @@ def run_cdc_pipeline(
     unknown op) are appended there with the whole-record JSON preserved for
     replay-after-fix, instead of being silently dropped — a
     poisoned message must never stall or silently thin the stream. The split
-    happens inside the SAME micro-batch as the upsert (one source scan, two
-    sinks, every trigger — continuous mode included); DLQ appends are
+    happens inside the SAME micro-batch as the upsert (one source query, no
+    second stream or checkpoint, every trigger — continuous mode included),
+    but the batch's files are scanned once per consumer: the DLQ write, the
+    touched-bucket observation and the merge each read them, so each event
+    is read three times with a DLQ and twice without. DLQ appends are
     at-least-once under batch retry, which is safe for a quarantine log.
 
     ``key_buckets``: the state table is laid out as key-hash bucket
@@ -113,8 +118,10 @@ def run_cdc_pipeline(
     raw = reader.json(envelope_dir)
 
     def upsert_batch(batch_df, batch_id: int) -> None:
-        # One scan of the batch, split to two sinks: dead letters append to
-        # the DLQ, valid envelopes merge into the bucketed state table.
+        # The batch split to two sinks: dead letters append to the DLQ,
+        # valid envelopes merge into the bucketed state table. Each job that
+        # reads the batch scans its files: the DLQ write, then the upsert's
+        # touched-bucket observation and its merge.
         is_dead = is_dead_letter()
         if dlq_path:
             dead = batch_df.filter(is_dead).select(

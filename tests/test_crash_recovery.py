@@ -719,8 +719,8 @@ def test_crash_inside_bucket_swap_replays_to_uncrashed_state(
     is published (an orphan staging dir), or after every rename but before
     the schema record is replaced (journal on disk) — then restart on the
     same checkpoint: the replayed batch must land on exactly the state and
-    the schema record an uncrashed run reaches, with no older key of a
-    swapped bucket lost."""
+    the schema record (its unique key included) an uncrashed run reaches,
+    with no older key of a swapped bucket lost."""
     import json
 
     from pyspark.errors import StreamingQueryException
@@ -757,4 +757,8 @@ def test_crash_inside_bucket_swap_replays_to_uncrashed_state(
         with open(os.path.join(table(root), _SCHEMA_RECORD)) as fh:
             return json.load(fh)
 
+    # the record equality covers the unique key: the pipeline's upsert
+    # records its key again on the replay, the other writers record none
     assert record(state) == record(control)
+    unique = ["booking_id"] if writer is _golden_pipeline else None
+    assert record(state).get("unique_key") == unique

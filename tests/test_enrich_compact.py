@@ -77,6 +77,41 @@ def test_compact_state_preserves_rows(spark, sf_dir, tmp_path):
     assert after_files <= 4
 
 
+def test_compacted_pipeline_table_keeps_its_unique_key(spark, tmp_path):
+    """Compaction passes the pipeline table's recorded key through: the
+    compacted table still reads with no arg-max and returns the same rows.
+    The key is recorded with the bucket count, so a later batch published
+    on a different bucket count drops it, and reads take the arg-max."""
+    from cdc_postgresql_clickhouse_spark.operators.state import (
+        _unique_key,
+        current_state,
+        state_table_stats,
+    )
+    from cdc_postgresql_clickhouse_spark.plans.inspect import formatted_plan
+    from cdc_postgresql_clickhouse_spark.streaming.pipeline import run_cdc_pipeline
+
+    envdir = tmp_path / "env"
+    envdir.mkdir()
+    events = golden_workload_envelopes()
+    with open(envdir / "batch0.json", "w") as f:
+        f.writelines(json.dumps(e) + "\n" for e in events[:-1])
+    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    run_cdc_pipeline(spark, str(envdir), state, ckpt, key_buckets=16)
+    want = sorted(map(tuple, current_state(read_state(spark, state)).collect()))
+
+    compact_state(spark, state, key_buckets=4)
+    assert state_table_stats(spark, state)["unique_key"] == ("booking_id",)
+    live = current_state(read_state(spark, state))
+    assert "Aggregate" not in formatted_plan(live)
+    assert sorted(map(tuple, live.collect())) == want
+
+    with open(envdir / "batch1.json", "w") as f:
+        f.write(json.dumps(events[-1]) + "\n")
+    run_cdc_pipeline(spark, str(envdir), state, ckpt, key_buckets=16)
+    assert _unique_key(read_state(spark, state)) is None
+    assert current_state(read_state(spark, state)).count() == 6  # golden final
+
+
 def test_compact_missing_state_is_noop(spark, tmp_path):
     compact_state(spark, str(tmp_path / "nope"), key_buckets=4)  # must not raise
 

@@ -272,6 +272,137 @@ def test_touched_buckets_runs_one_job(spark):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
+# Law test for the recorded unique key: NULL keys, 1- and 2-column keys,
+# deletes, late versions (any version in any batch) and a replayed batch.
+_KEYED_SCHEMA = "k1 int, k2 string, version long, ts_ms long, is_deleted int, payload long"
+keyed_batches_strategy = st.lists(
+    st.lists(
+        st.tuples(
+            _maybe(st.integers(min_value=0, max_value=2)),
+            _maybe(st.sampled_from(["a", "b"])),
+            st.integers(min_value=0, max_value=3),
+            _maybe(st.integers(min_value=0, max_value=1)),
+            st.integers(min_value=0, max_value=1),
+            _maybe(st.integers(min_value=0, max_value=2)),
+        ),
+        min_size=1,
+        max_size=10,
+    ),
+    min_size=1,
+    max_size=3,
+)
+_VERSIONS = ("version", "ts_ms")
+
+
+def _upsert_keyed(spark, path, rows, keys):
+    from cdc_postgresql_clickhouse_spark.operators.state import upsert_changes_bucketed
+
+    upsert_changes_bucketed(
+        spark, spark.createDataFrame(rows, _KEYED_SCHEMA), path, 4, keys, _VERSIONS
+    )
+
+
+def _read_both(spark, path, keys):
+    """``current_state`` of the frame ``read_state`` returned, and of a
+    derived frame, which carries no recorded key: the arg-max answer."""
+    from cdc_postgresql_clickhouse_spark.operators.state import read_state
+
+    fast = current_state(read_state(spark, path), keys, _VERSIONS, keep_internal=True)
+    argmax = current_state(
+        read_state(spark, path).select("*"), keys, _VERSIONS, keep_internal=True
+    )
+    return _bag(fast), _bag(argmax)
+
+
+@given(batches=keyed_batches_strategy, replay=st.booleans(), two_cols=st.booleans())
+@example(
+    batches=[[(None, "a", 1, 0, 0, 1), (None, None, 2, None, 1, None), (0, "b", 0, 1, 0, 2)]],
+    replay=True,
+    two_cols=True,
+)
+@settings(PROP_SETTINGS, max_examples=8)  # up to 4 bucket publishes per example
+def test_recorded_unique_key_read_equals_argmax(
+    spark, tmp_path_factory, batches, replay, two_cols
+):
+    """A table the bucketed upsert wrote records its key, and reading it
+    with no arg-max gives the arg-max answer, which is also the one-shot
+    ``apply_changes`` over every change."""
+    from cdc_postgresql_clickhouse_spark.operators.state import _unique_key, read_state
+
+    keys = ("k1", "k2") if two_cols else ("k1",)
+    path = str(tmp_path_factory.mktemp("unique") / "state")
+    for rows in batches + batches[:1] * replay:
+        _upsert_keyed(spark, path, rows, keys)
+    assert _unique_key(read_state(spark, path)) == keys
+    fast, argmax = _read_both(spark, path, keys)
+    every = spark.createDataFrame([r for b in batches for r in b], _KEYED_SCHEMA)
+    assert fast == argmax == _bag(current_state(every, keys, _VERSIONS, keep_internal=True))
+
+
+def test_unrecorded_or_uncovered_key_reads_through_the_argmax(spark, tmp_path):
+    """The reads that must take the arg-max, and still return its answer:
+    a raw frame published with no stated key over a keyed table (it leaves
+    duplicates, and a later stated upsert does not record the key again),
+    a ``key_cols`` that does not cover the recorded key, and a record or
+    journal in the format from before the key was recorded."""
+    import json
+    import os
+
+    from cdc_postgresql_clickhouse_spark.operators.state import (
+        _SCHEMA_RECORD,
+        _SWAP_JOURNAL,
+        _unique_key,
+        read_state,
+        write_state,
+    )
+
+    def seeded(name, keys):
+        path = str(tmp_path / name)
+        _upsert_keyed(spark, path, [(k, "a", 1, 0, 0, k) for k in range(6)], keys)
+        assert _unique_key(read_state(spark, path)) == keys
+        return path
+
+    # raw changes, two rows for key 0, over every bucket of a keyed table
+    path = seeded("raw", ("k1",))
+    raw = [(k, "a", 1, 0, 0, k) for k in range(6)] + [(0, "a", 2, 0, 0, 9)]
+    write_state(spark.createDataFrame(raw, _KEYED_SCHEMA), path, key_buckets=4, key_cols=("k1",))
+    assert read_state(spark, path).count() == 7
+    assert _unique_key(read_state(spark, path)) is None
+    _upsert_keyed(spark, path, [(5, "a", 3, 0, 0, 50)], ("k1",))
+    assert _unique_key(read_state(spark, path)) is None
+    fast, argmax = _read_both(spark, path, ("k1",))
+    assert fast == argmax
+    assert {(r[0], r[5]) for r in fast} == {(0, 9), (1, 1), (2, 2), (3, 3), (4, 4), (5, 50)}
+
+    # a key_cols that does not cover the recorded (k1, k2): 2 rows, one per k1
+    path = seeded("uncovered", ("k1", "k2"))
+    _upsert_keyed(spark, path, [(0, "b", 2, 0, 0, 7)], ("k1", "k2"))
+    fast, argmax = _read_both(spark, path, ("k1",))
+    assert fast == argmax
+    assert {(r[0], r[1], r[5]) for r in fast if r[0] == 0} == {(0, "b", 7)}
+    assert sum(fast.values()) == 6
+
+    # a record, then a journal, in the format with no key
+    path = seeded("old_record", ("k1",))
+    want, _ = _read_both(spark, path, ("k1",))
+    record = os.path.join(path, _SCHEMA_RECORD)
+    with open(record) as fh:
+        schema = {k: v for k, v in json.load(fh).items() if k in ("type", "fields")}
+    with open(record, "w") as fh:
+        json.dump(schema, fh)
+    assert _unique_key(read_state(spark, path)) is None
+    assert _read_both(spark, path, ("k1",)) == (want, want)
+    _upsert_keyed(spark, path, [(0, "a", 0, 0, 0, 0)], ("k1",))  # a late change
+    assert _unique_key(read_state(spark, path)) is None
+    assert _read_both(spark, path, ("k1",)) == (want, want)
+    path = seeded("old_journal", ("k1",))
+    with open(os.path.join(path, _SWAP_JOURNAL), "w") as fh:
+        json.dump({"buckets": [], "staged": f"{path}.staged", "schema": schema}, fh)
+    assert _unique_key(read_state(spark, path)) is None
+    assert not os.path.exists(os.path.join(path, _SWAP_JOURNAL))
+    assert _read_both(spark, path, ("k1",)) == (want, want)
+
+
 def test_lsh_tuning_report_amplification_monotonicity(spark, sf_dir):
     """Aligned band refinements nest: a (2x6) bucket match implies both
     constituent (4x3) matches, and a (6x2) match implies both (12x1)

@@ -129,6 +129,48 @@ def test_bucketed_upsert_runs_one_shuffle(spark, tmp_path, monkeypatch):
     assert final.filter(F.col("status") == "Closed").count() == len(range(0, 400, 7))
 
 
+def test_pipeline_state_read_runs_no_argmax(spark, tmp_path):
+    """A pipeline-written table's commit records one row per key, so
+    ``current_state(read_state(p))`` plans no aggregate and no
+    ``Exchange`` (the arg-max's SortAggregate and its shuffle on the key
+    are gone), a point read runs one Spark job (the arg-max read ran two),
+    and the rows equal the arg-max read's."""
+    from cdc_postgresql_clickhouse_spark.operators.state import read_state
+    from cdc_postgresql_clickhouse_spark.plans.inspect import formatted_plan, shuffle_count
+
+    env_dir = str(tmp_path / "envelopes")
+    os.makedirs(env_dir)
+    with open(os.path.join(env_dir, "batch.json"), "w") as f:
+        for e in golden_workload_envelopes():
+            f.write(json.dumps(e) + "\n")
+    state_path = str(tmp_path / "state")
+    run_cdc_pipeline(spark, env_dir, state_path, str(tmp_path / "ckpt"))
+
+    live = current_state(read_state(spark, state_path))
+    assert "Aggregate" not in formatted_plan(live)
+    assert shuffle_count(live) == 0
+    # select("*") derives a frame with no recorded key: the arg-max read
+    argmax = current_state(read_state(spark, state_path).select("*"))
+    assert "Aggregate" in formatted_plan(argmax)
+    assert sorted(map(tuple, live.collect())) == sorted(map(tuple, argmax.collect()))
+    assert live.count() == 6
+
+    sc = spark.sparkContext
+    group = f"point-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = (
+            current_state(read_state(spark, state_path))
+            .filter(F.col("booking_id") == "b1")
+            .select("booking_id", "version")
+            .collect()
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r["booking_id"] for r in rows] == ["b1"]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_pipeline_single_source_scan(spark, tmp_path):
     """DLQ split happens inside the main micro-batch: no second readStream,
     no separate DLQ checkpoint."""

@@ -125,7 +125,8 @@ def test_session_fold_three_way_split_and_fence(spark, sf_dir):
 
 def test_state_table_stats_reports_layout(spark, sf_dir):
     """The ops introspection sees what the fold sink wrote: every bucket
-    directory counted, row count matching the state, bytes positive."""
+    directory counted, row count matching the state, bytes positive, and
+    no recorded unique key."""
     from cdc_postgresql_clickhouse_spark.operators.state import state_table_stats
     from cdc_postgresql_clickhouse_spark.streaming.fold import FOLD_BUCKETS
 
@@ -140,6 +141,7 @@ def test_state_table_stats_reports_layout(spark, sf_dir):
         assert st["n_files"] >= st["n_buckets"]
         assert st["total_bytes"] > 0
         assert st["max_files_per_bucket"] >= st["min_files_per_bucket"] >= 1
+        assert st["unique_key"] is None  # the fold does not state one row per key
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
