@@ -248,58 +248,34 @@ def optimize_clustered(
       file's; disjoint files are already perfectly clustered relative to
       the rest and are left BYTE-UNTOUCHED.
     - dirty rows are re-ranged + sorted into ceil(dirty_share × n_files)
-      new files; old dirty files are deleted after the staged write lands
-      (writer-exclusive via the table's _state_lock; readers must tolerate
-      a transient relist, the streamed-index compaction posture).
+      new files, writer-exclusive via the table's ``_state_lock``.
     - idempotent: a second call finds no overlapping files and rewrites
       nothing (returns n_dirty == 0).
-    - crash-safe swap: the dirty-file set AND the staged directory are
-      journaled (to ``_optimize_journal.json`` inside the table dir — the
-      underscore prefix hides it from Spark's readers) BEFORE the staged
-      files move in, and the journal is cleared only after the originals
-      are deleted. Recovery rolls FORWARD: it first moves any parquet
-      still sitting in the journaled staged directory into the table (so
-      a crash between the journal swap and the move loop cannot strand
-      replacement rows), then finishes the delete phase, then removes the
-      journal and the staged dir. Either crash window therefore heals to
-      exactly one copy of every dirty row before the table is read.
+    - crash-safe: the new files are staged at ``<path>.staged`` and commit
+      through the state tables' one journaled swap
+      (``operators.state.recover_bucket_swap``): the staged files move in,
+      then the dirty files are dropped, and the table's schema record, if
+      it has one, is kept. A crash at any step is rolled forward by the
+      next call (or ``read_state``) before the table is read, so every
+      dirty row ends with exactly one copy. The table is flat: its data
+      files sit directly under ``path``.
 
     Returns {"n_files", "n_dirty", "n_rewritten_files"}."""
-    import json
     import math
     import os
-    import shutil
-    import uuid
 
-    from cdc_postgresql_clickhouse_spark.operators.state import _state_lock
+    from cdc_postgresql_clickhouse_spark.operators.state import (
+        _journaled_swap,
+        _record,
+        _staged_root,
+        _state_lock,
+        recover_bucket_swap,
+    )
 
     keyfn = (lambda d: hilbert_stages(d, col_a, col_b, min(bits, 8), out="__k")) if key == "hilbert" else None
-    journal = os.path.join(path, "_optimize_journal.json")
 
     with _state_lock(path):
-        if os.path.exists(journal):
-            # a previous call crashed after publishing its journal: roll its
-            # swap FORWARD before trusting the table's contents. Order
-            # matters — move the surviving staged replacements in FIRST
-            # (a crash between the journal swap and the move loop leaves
-            # them stranded in the staged dir; deleting the originals
-            # before rescuing them would lose the dirty rows), THEN finish
-            # the delete phase, then clear the journal.
-            with open(journal) as fh:
-                entry = json.load(fh)
-            stale_staged = entry.get("staged")
-            if stale_staged and os.path.isdir(stale_staged):
-                for name in os.listdir(stale_staged):
-                    if name.endswith(".parquet"):
-                        shutil.move(
-                            os.path.join(stale_staged, name),
-                            os.path.join(path, f"opt-{uuid.uuid4().hex[:8]}-{name}"),
-                        )
-                shutil.rmtree(stale_staged, ignore_errors=True)
-            for stale in entry["dirty"]:
-                if os.path.exists(stale):
-                    os.remove(stale)
-            os.remove(journal)
+        recover_bucket_swap(path)
         df = spark.read.parquet(path)
         if keyfn is not None:
             keyed = keyfn(df)
@@ -316,10 +292,7 @@ def optimize_clustered(
             return {"n_files": len(ranges), "n_dirty": 0, "n_rewritten_files": 0}
         k_out = max(1, math.ceil(n_files * len(dirty) / max(1, len(ranges))))
         dirty_rows = keyed.filter(F.input_file_name().isin(*sorted(dirty)))
-        staged = os.path.join(
-            os.path.dirname(path.rstrip("/")),
-            f".opt_staged_{uuid.uuid4().hex[:8]}",
-        )
+        staged = _staged_root(path)
         (
             dirty_rows.repartitionByRange(k_out, "__k")
             .sortWithinPartitions("__k")
@@ -327,37 +300,14 @@ def optimize_clustered(
             .write.mode("overwrite")
             .parquet(staged)
         )
-        locals_ = []
-        for f in sorted(dirty):
-            local = f.replace("file://", "", 1) if f.startswith("file:") else f
-            locals_.append(local.replace("file:", "", 1))
-        # journal the doomed originals AND the staged dir BEFORE any staged
-        # file becomes visible; written atomically so a torn journal can't
-        # half-reconcile. Recording the staged path is what lets recovery
-        # roll forward if we crash before the move loop below finishes.
-        tmp_journal = journal + ".tmp"
-        with open(tmp_journal, "w") as fh:
-            json.dump({"dirty": locals_, "staged": staged}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp_journal, journal)
-        moved = 0
-        for name in os.listdir(staged):
-            if name.endswith(".parquet"):
-                shutil.move(
-                    os.path.join(staged, name),
-                    os.path.join(path, f"opt-{uuid.uuid4().hex[:8]}-{name}"),
-                )
-                moved += 1
-        shutil.rmtree(staged, ignore_errors=True)
-        for local in locals_:
-            if os.path.exists(local):
-                os.remove(local)
-        os.remove(journal)
+        moves = sorted(n for n in os.listdir(staged) if n.endswith(".parquet"))
+        names = sorted(os.path.basename(f) for f in dirty)
+        drop = names + [f".{n}.crc" for n in names]  # and their checksum siblings
+        _journaled_swap(path, staged, moves, drop, _record(path))
         return {
             "n_files": len(ranges),
             "n_dirty": len(dirty),
-            "n_rewritten_files": moved,
+            "n_rewritten_files": len(moves),
         }
 
 

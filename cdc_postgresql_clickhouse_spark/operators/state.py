@@ -25,6 +25,17 @@ memory, which is the 100 TB posture. Two equivalent consumption modes:
    only buckets containing updated keys are rewritten, and the merge shares
    its one shuffle with the bucket publish (``upsert_changes_bucketed``).
 
+One commit protocol replaces table data, as ClickHouse's atomic part swap
+serves inserts, merges and ``OPTIMIZE`` alike: stage the new data, publish
+a journal, and let ``recover_bucket_swap`` run it. The bucket publish
+(``write_state``), compaction (``compact_state``), the streamed-index
+segment merge (``streaming.postings.compact_partitioned_index``) and the
+clustered OPTIMIZE (``layout.optimize_clustered``) all commit this way, so
+a crash at any step heals to the new table and the table directory never
+goes missing. The versioned MV (``streaming.mvstore``) is the one other
+protocol: its lock-free readers pin a version directory, which an
+in-place swap cannot give them.
+
 Version semantics, NOT event time (survey ST2): a late event simply loses the
 max-version contest; no watermarks. Idempotent under at-least-once replay
 (``clickhouse_sink_configuration.json:13``) because arg-max over a multiset
@@ -55,6 +66,7 @@ from pyspark.sql.types import StructType
 
 DEFAULT_KEY = ("booking_id",)
 DEFAULT_VERSION_ORDER = ("version", "ts_ms", "is_deleted")
+DEFAULT_KEY_BUCKETS = 16
 
 
 class StateLockError(RuntimeError):
@@ -282,6 +294,15 @@ def _publish_partitions(spark: SparkSession, key_buckets: int) -> int:
     return min(key_buckets, spark.sparkContext.defaultParallelism)
 
 
+def _bucketed(df: DataFrame, key_cols: tuple[str, ...], key_buckets: int) -> DataFrame:
+    """``df`` with its ``__bucket`` column (an existing one is reused),
+    repartitioned by it into ``_publish_partitions`` tasks: the layout of a
+    bucket publish, one file per bucket."""
+    if BUCKET_COL not in df.columns:
+        df = df.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets))
+    return df.repartition(_publish_partitions(df.sparkSession, key_buckets), BUCKET_COL)
+
+
 def _touched_buckets(
     df: DataFrame, key_cols: tuple[str, ...], n_buckets: int
 ) -> list[int]:
@@ -329,13 +350,16 @@ def _unfenced_buckets_keyed(
 
 
 _SWAP_JOURNAL = "_state_swap_journal.json"
+# The journal ``layout.optimize_clustered`` wrote before it committed
+# through the swap above; ``recover_bucket_swap`` still runs one it finds.
+_OPTIMIZE_JOURNAL = "_optimize_journal.json"
 # The table's schema, recorded at every commit (the analogue of the
 # columns.txt a ReplacingMergeTree part keeps next to its data), so a read
 # never scans files to learn the table's shape. The leading "_" keeps it,
-# like the journal, out of Spark's file index. A table that holds one row
-# per key also records that key and its bucket count next to the schema's
-# fields ("unique_key", "key_buckets"; see ``write_state``). A file added
-# to the table other than through ``write_state`` is covered by neither.
+# like the journal, out of Spark's file index. Every bucketed commit also
+# records its bucket count ("key_buckets"), and a table that holds one row
+# per key records that key ("unique_key"; see ``write_state``). A file
+# added to the table other than through the swap is covered by neither.
 _SCHEMA_RECORD = "_state_schema.json"
 
 
@@ -406,9 +430,9 @@ def read_state(
     key-hash buckets (partition pruning: only those directories are scanned —
     the read is O(touched buckets), not O(state)).
 
-    Protocol, under the state lock: (1) roll a torn bucket swap (crash
-    between ``write_state``'s per-bucket renames) FORWARD — a direct reader
-    would otherwise see a journaled-but-unswapped bucket as
+    Protocol, under the state lock: (1) roll a torn swap (a crash inside
+    any journaled commit: a bucket publish or a compaction) FORWARD — a
+    direct reader would otherwise see a journaled-but-unswapped bucket as
     never-committed state (ADVICE r8); (2) read the schema record and list
     the table (``_read_table``). The read takes its schema from the record
     and starts no Spark job; a table with no record falls back to
@@ -448,127 +472,167 @@ def read_state(
 def write_state(
     state: DataFrame,
     path: str,
-    key_buckets: int | None = None,
+    key_buckets: int,
     key_cols: tuple[str, ...] = DEFAULT_KEY,
     one_row_per_key: bool = False,
 ) -> None:
-    """Materialize state and record its schema. Without ``key_buckets``: a
-    plain overwrite of the whole table, then the schema record. The
-    overwrite deletes the table directory, record included, before it
-    writes, so a crash before the new record lands leaves a table read by
-    inference, never a stale record.
+    """The crash-atomic bucket publish: the table is laid out as
+    ``__bucket=K`` partition directories keyed on ``pmod(xxhash64(key),
+    key_buckets)`` (the unit of incremental rewrite), and ONLY the buckets
+    present in ``state`` are replaced; every other bucket directory is left
+    byte-identical. On Delta this becomes MERGE + OPTIMIZE. An existing
+    ``__bucket`` column is reused as the bucket id; the staged write
+    repartitions by it into ``_publish_partitions`` tasks (a no-op when the
+    input is already partitioned so: ``upsert_changes_bucketed``).
 
-    With ``key_buckets``: the crash-atomic bucket publish — the table is
-    laid out as ``__bucket=K`` partition directories keyed on
-    ``pmod(xxhash64(key), N)`` (the unit of incremental rewrite), and ONLY
-    the buckets present in ``state`` are replaced; every other bucket
-    directory is left byte-identical. On Delta this becomes MERGE + OPTIMIZE.
-    An existing ``__bucket`` column is reused as the bucket id; the staged
-    write repartitions by it into ``_publish_partitions`` tasks (a no-op
-    when the input is already partitioned so: ``upsert_changes_bucketed``).
+    The commit is the one journaled swap (``recover_bucket_swap``; the
+    ReplacingMergeTree part swap, per bucket): the buckets' COMPLETE new
+    state is staged, then a journal names the staged bucket dirs and the
+    table's new schema (``_table_schema`` of the staged frame over the
+    current table, whose schema comes from its record, or is inferred once
+    if it has none). A crash before the journal leaves an orphan staging
+    dir and the old state intact; a crash after it is rolled forward by the
+    next reader or writer, so a replayed batch always merges into committed
+    state, never into an emptied bucket. Runs under the path's state lock,
+    reusing it if the calling thread already holds it.
 
-    Protocol (same journal discipline as ``layout.optimize_clustered``;
-    the ReplacingMergeTree part swap, per bucket): (1) write the buckets'
-    COMPLETE new state to a sibling staging dir; (2) fsync-publish a journal
-    naming the staged bucket dirs and the table's new schema
-    (``_table_schema`` of the staged frame over the current table, whose
-    schema comes from its record, or is inferred once if it has none); (3)
-    ``recover_bucket_swap`` runs the journal: it swaps each bucket directory
-    in with rmtree+rename — rename is atomic, so every bucket is either
-    wholly old or wholly new at all times — records the schema, and clears
-    the journal and staging dir. A crash in (1) leaves an orphan staging dir
-    and the old state intact; a crash in (3) leaves the journal, which the
-    next ``recover_bucket_swap`` (``read_state`` runs it) replays, so a
-    replayed batch always merges into committed state, never into an
-    emptied bucket. Runs under the path's state lock, reusing it if the
-    calling thread already holds it.
+    The record holds ``key_buckets``. A publish in another count would
+    leave a key's older row in its bucket of the old count, where a later
+    publish can bring it back over a newer one, so it raises ``ValueError``
+    before anything is written; ``compact_state`` rebuckets a table.
 
     ``one_row_per_key``: the caller states that ``state`` holds at most one
-    row per ``key_cols``. The bucket publish then records ``key_cols`` as
-    the table's ``unique_key`` (with ``key_buckets``) in the journaled
-    schema, but only if the table had no data before or its record already
-    held the same key and bucket count: the publish keeps every bucket it
-    does not rewrite, and a key's row stays in one bucket only while the
-    key and bucket count stay the same. Any other write leaves the table
-    with no recorded key, so its reads run the arg-max."""
-    if not key_buckets:
-        state.write.mode("overwrite").parquet(path)
-        _publish_json(os.path.join(path, _SCHEMA_RECORD), _table_schema(state, None))
-        return
-    staged_root = f"{os.path.abspath(path)}.staged"
+    row per ``key_cols``. The publish then records ``key_cols`` as the
+    table's ``unique_key``, but only if the table had no data before or its
+    record already held the same key: the publish keeps every bucket it
+    does not rewrite. Any other write leaves the table with no recorded
+    key, so its reads run the arg-max."""
     with _own_lock(path):
         recover_bucket_swap(path)  # a torn earlier swap lands before this one
-        out = (
-            state
-            if BUCKET_COL in state.columns
-            else state.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets))
-        )
         record = _record(path)
+        recorded = (record or {}).get("key_buckets", key_buckets)
+        if recorded != key_buckets:
+            raise ValueError(
+                f"state table {path!r} is laid out in {recorded} key buckets, not {key_buckets}: "
+                f"a publish in {key_buckets} would keep a key's older row in another bucket. "
+                f"Rebucket it first: compact_state(spark, path, key_buckets={key_buckets})"
+            )
         if record is None:  # a table from before the record: infer its schema once
-            table = _read_table(out.sparkSession, path, None)
+            table = _read_table(state.sparkSession, path, None)
             prev = None if table is None else table.drop(BUCKET_COL).schema
         else:
             prev = StructType.fromJson(record)
-        schema = _table_schema(out, prev)
-        layout = {"unique_key": list(key_cols), "key_buckets": key_buckets}
-        if one_row_per_key and (prev is None or layout.items() <= (record or {}).items()):
-            schema.update(layout)  # prev is None: the table has no data yet
-        (
-            out.repartition(_publish_partitions(out.sparkSession, key_buckets), BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(staged_root)
-        )
-        bucket_dirs = sorted(
-            d for d in os.listdir(staged_root) if d.startswith(f"{BUCKET_COL}=")
-        )
-        os.makedirs(path, exist_ok=True)
-        _publish_json(
-            os.path.join(path, _SWAP_JOURNAL),
-            {"buckets": bucket_dirs, "staged": staged_root, "schema": schema},
-        )
-        recover_bucket_swap(path)
+        schema = {**_table_schema(state, prev), "key_buckets": key_buckets}
+        # prev is None: the table has no data yet
+        if one_row_per_key and (prev is None or (record or {}).get("unique_key") == list(key_cols)):
+            schema["unique_key"] = list(key_cols)
+        _swap_in_partitions(path, _bucketed(state, key_cols, key_buckets), BUCKET_COL, schema)
+
+
+def _staged_root(path: str) -> str:
+    return f"{os.path.abspath(path)}.staged"
+
+
+def _swap_in_partitions(
+    path: str, df: DataFrame, part_col: str, schema: dict | None, drop_rest: bool = False
+) -> None:
+    """Stage ``df`` partitioned by ``part_col`` at ``<path>.staged`` and
+    commit it through the journaled swap: each staged ``part_col=``
+    directory replaces its namesake. With ``drop_rest`` the staged table
+    replaces the whole table: every other data entry (the other partition
+    directories, loose ``part-`` files and their ``.crc`` siblings) is
+    dropped. Callers hold the state lock."""
+    staged = _staged_root(path)
+    df.write.mode("overwrite").partitionBy(part_col).parquet(staged)
+    parts = sorted(d for d in os.listdir(staged) if d.startswith(f"{part_col}="))
+    drop = []
+    if drop_rest:
+        stale = (f"{part_col}=", "part-", ".part-")
+        drop = sorted(n for n in os.listdir(path) if n not in parts and n.startswith(stale))
+    _journaled_swap(path, staged, parts, drop, schema)
+
+
+def _journaled_swap(
+    path: str, staged: str, moves: list[str], drop: list[str], schema: dict | None
+) -> None:
+    """Publish the swap journal for a complete staged write, then run it
+    (``recover_bucket_swap``). ``schema`` None: the table has no record
+    after the swap."""
+    entry = {"buckets": moves, "staged": staged, "drop": drop, "schema": schema}
+    os.makedirs(path, exist_ok=True)
+    _publish_json(os.path.join(path, _SWAP_JOURNAL), entry)
+    recover_bucket_swap(path)
+
+
+def _optimize_entry(path: str, journal: str) -> dict:
+    """A journal in the format ``layout.optimize_clustered`` wrote before
+    it committed through the one swap (``{"dirty": [file paths], "staged":
+    dir}``) as the general entry: the staged parquet files move in, the
+    dirty files are dropped, the table's record is kept."""
+    with open(journal) as fh:
+        old = json.load(fh)
+    staged = old.get("staged") or _staged_root(path)
+    files = sorted(os.listdir(staged)) if os.path.isdir(staged) else []
+    moves = [f for f in files if f.endswith(".parquet")]
+    drop = [os.path.basename(f) for f in old["dirty"]]
+    return {"buckets": moves, "staged": staged, "drop": drop, "schema": _record(path)}
 
 
 def recover_bucket_swap(path: str) -> bool:
-    """Run a journaled ``write_state`` bucket swap: ``write_state`` calls
-    this right after it publishes the journal, and every reader and writer
-    calls it first, so a swap a crash interrupted is finished by the same
-    code.
+    """Run the table's swap journal. This is the one code that moves staged
+    data into a table: every commit calls it right after it publishes the
+    journal, and every reader and writer calls it first, so a swap a crash
+    interrupted is finished by the same code.
 
-    The journal is written only AFTER the staged write is complete, so
-    the swap always rolls FORWARD: any journaled bucket still present in
-    the staged dir replaces its table directory (rmtree + rename — the
-    rename is atomic per bucket); buckets already swapped are skipped.
-    Then the journaled schema, with its unique key if it has one, replaces
-    the schema record; a journal with no schema (written before the record
-    existed) removes the record, so the table is read by inference.
-    Returns True if a journal was run. Callers must hold the state lock. An orphan staging dir with NO journal
-    (crash mid-staged-write) is deleted — the old state is intact and the
-    batch replays."""
+    A journal entry names ``staged``, the staging dir; ``buckets``, the
+    top-level entries (dirs or files) that move from it into the table,
+    each replacing any entry of the same name; ``drop``, the table entries
+    removed after the moves; and ``schema``, the table's new record. The
+    journal is written only AFTER the staged write is complete, so the swap
+    always rolls FORWARD, and every step is idempotent: an entry already
+    moved is skipped (its source is gone), and a drop whose target is gone
+    is a no-op. A replaced directory is renamed aside into the staging dir,
+    never emptied in place, so a reader that lists it sees all of its old
+    files or all of its new ones (or, between its two renames, none), and
+    the table directory itself never goes missing. After the moves the
+    journaled schema, with its bucket count and unique key, replaces the
+    record (a journal with no schema removes it, so the table is read by
+    inference); then the drops run, and the journal and the staging dir are
+    cleared. A journal in ``layout.optimize_clustered``'s earlier format is
+    run as the same entry (``_optimize_entry``).
+
+    Returns True if a journal was run. Callers must hold the state lock. An
+    orphan staging dir with NO journal (crash mid-staged-write) is deleted
+    — the old state is intact and the batch replays."""
     journal = os.path.join(path, _SWAP_JOURNAL)
-    staged_root = f"{os.path.abspath(path)}.staged"
-    if not os.path.exists(journal):
-        if os.path.isdir(staged_root):
-            shutil.rmtree(staged_root, ignore_errors=True)
+    if os.path.exists(journal):
+        with open(journal) as fh:
+            entry = json.load(fh)
+    elif os.path.exists(os.path.join(path, _OPTIMIZE_JOURNAL)):
+        journal = os.path.join(path, _OPTIMIZE_JOURNAL)
+        entry = _optimize_entry(path, journal)
+    else:
+        shutil.rmtree(_staged_root(path), ignore_errors=True)
         return False
-    with open(journal) as fh:
-        entry = json.load(fh)
-    for bucket_dir in entry["buckets"]:
-        src = os.path.join(entry["staged"], bucket_dir)
-        dst = os.path.join(path, bucket_dir)
-        if os.path.isdir(src):
+    staged = entry["staged"]
+    for name in entry["buckets"]:
+        src, dst = os.path.join(staged, name), os.path.join(path, name)
+        if os.path.exists(src):
             if os.path.isdir(dst):
-                shutil.rmtree(dst)
+                os.rename(dst, f"{src}.replaced")
             os.rename(src, dst)
     record = os.path.join(path, _SCHEMA_RECORD)
-    if "schema" in entry:
+    if entry.get("schema") is not None:
         _publish_json(record, entry["schema"])
-    else:
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(record)
+    elif os.path.exists(record):
+        os.remove(record)
+    for target in (os.path.join(path, name) for name in entry.get("drop", [])):
+        if os.path.isdir(target):
+            shutil.rmtree(target)
+        elif os.path.lexists(target):
+            os.remove(target)
     os.remove(journal)
-    shutil.rmtree(entry["staged"], ignore_errors=True)
+    shutil.rmtree(staged, ignore_errors=True)
     return True
 
 
@@ -619,9 +683,7 @@ def upsert_changes_bucketed(
     with _state_lock(path):
         state = read_state(spark, path, buckets=touched)
         union = updates if state is None else state.unionByName(updates, allowMissingColumns=True)
-        union = union.withColumn(BUCKET_COL, _bucket_expr(key_cols, key_buckets)).repartition(
-            _publish_partitions(spark, key_buckets), BUCKET_COL
-        )
+        union = _bucketed(union, key_cols, key_buckets)
         merged = apply_changes(None, union, (BUCKET_COL, *key_cols), version_cols)
         write_state(
             merged, path, key_buckets=key_buckets, key_cols=key_cols, one_row_per_key=True
@@ -630,25 +692,29 @@ def upsert_changes_bucketed(
 
 
 def compact_state(
-    spark: SparkSession, path: str, key_buckets: int = 8
+    spark: SparkSession, path: str, key_buckets: int | None = None
 ) -> None:
     """The OPTIMIZE / background-merge analogue (ClickHouse merges parts
-    continuously; ``OPTIMIZE TABLE ... DEDUPLICATE`` forces it,
-    /root/reference/README.md:310). Rewrites the state into ``key_buckets``
+    continuously; ``OPTIMIZE TABLE ... DEDUPLICATE`` forces it, the
+    reference's ``README.md:310``). Rewrites the state into ``key_buckets``
     key-hashed partition directories (one file per bucket), restoring scan
     locality and making subsequent dirty-bucket merges touch fewer files.
+    ``key_buckets`` defaults to the table's recorded count, or to
+    ``DEFAULT_KEY_BUCKETS`` if it records none; the new count is recorded,
+    and every later publish must use it (``write_state``).
 
     Concurrency contract, ENFORCED: not safe concurrently with a live upsert
     on the same path — both are read-modify-rewrite, so a batch committing
-    between this read and the final swap would be lost (ClickHouse's OPTIMIZE
+    between this read and the swap would be lost (ClickHouse's OPTIMIZE
     takes a part-level lock for the same reason). Both mutators acquire the
     path's ``_state_lock``; a concurrent call raises ``StateLockError``
-    instead of silently racing. Crash safety: the compacted copy is fully
-    written to a temp directory first, then the old state is moved aside (not
-    deleted) before the temp is renamed in — no step ever deletes the only
-    complete copy, so a crash at any point leaves either the old or the new
-    state recoverable on disk. On Delta this maps to OPTIMIZE + ZORDER, is
-    ACID, and needs no coordination.
+    instead of silently racing. Crash safety: the rebucketed table commits
+    through the one journaled swap (``recover_bucket_swap``) — staged whole,
+    then its bucket dirs move in and every data entry they do not replace
+    (old bucket dirs, loose ``part-`` files) is dropped — so a crash at any
+    step leaves the old table or a journal the next reader rolls forward to
+    the new one. On Delta this maps to OPTIMIZE + ZORDER, is ACID, and
+    needs no coordination.
 
     A table whose record holds a unique key is rebucketed on that key and
     keeps it (the rows are the same, so they are still one per key); any
@@ -657,25 +723,14 @@ def compact_state(
         state = read_state(spark, path)
         if state is None:
             return
+        if key_buckets is None:
+            key_buckets = (_record(path) or {}).get("key_buckets", DEFAULT_KEY_BUCKETS)
         unique = _unique_key(state)
-        tmp = f"{path}.compact-tmp"
-        old = f"{path}.compact-old"
-        # the bucket publish keeps buckets it does not rewrite, so a crashed
-        # compaction's leftover must not seed this one with stale buckets;
-        # its lock can only be a crashed compaction's (we hold path's lock)
-        shutil.rmtree(tmp, ignore_errors=True)
-        break_state_lock(tmp, force=True)
-        write_state(
-            state.localCheckpoint(eager=True),
-            tmp,
-            key_buckets=key_buckets,
-            key_cols=unique or DEFAULT_KEY,
-            one_row_per_key=unique is not None,
-        )
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(path, old)
-        os.rename(tmp, path)  # crash before this: complete copies at both tmp+old
-        shutil.rmtree(old, ignore_errors=True)
+        schema = {**_table_schema(state, None), "key_buckets": key_buckets}
+        if unique is not None:
+            schema["unique_key"] = list(unique)
+        out = _bucketed(state, unique or DEFAULT_KEY, key_buckets)
+        _swap_in_partitions(path, out, BUCKET_COL, schema, drop_rest=True)
 
 
 def delta_available() -> bool:
@@ -782,9 +837,9 @@ def state_table_stats(spark: SparkSession, path: str) -> dict:
     and reads NO data files except one count() over the table.
     ``unique_key`` is the key the table's commit records it holds one row
     per (None if it records none): reads of a table with one skip the
-    arg-max (``current_state``)."""
-    import os
-
+    arg-max (``current_state``). ``key_buckets`` is the recorded bucket
+    count (None if it records none): the count every publish and a
+    compaction that keeps the layout must use."""
     buckets: dict[str, int] = {}
     total_bytes = 0
     n_files = 0
@@ -808,4 +863,5 @@ def state_table_stats(spark: SparkSession, path: str) -> dict:
         "max_files_per_bucket": per_bucket[-1] if per_bucket else 0,
         "min_files_per_bucket": per_bucket[0] if per_bucket else 0,
         "unique_key": None if df is None else _unique_key(df),
+        "key_buckets": (_record(path) or {}).get("key_buckets"),
     }

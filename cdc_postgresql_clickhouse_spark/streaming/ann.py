@@ -67,12 +67,14 @@ def ingest_batch_ivf(
     must be present — the seed contract) and persisted. Model creation and
     the append both run under the table's ``_state_lock`` (same convention
     as ``streaming/dedup.py``) so a concurrent ``compact_assignments``
-    cannot swap the directory between this batch's write and its
-    visibility."""
-    from cdc_postgresql_clickhouse_spark.operators.state import _state_lock
+    cannot swap the lists between this batch's write and its visibility;
+    a torn compaction is rolled forward first (``recover_bucket_swap``), so
+    it never replaces a list this batch has just appended to."""
+    from cdc_postgresql_clickhouse_spark.operators.state import _state_lock, recover_bucket_swap
 
     emb = batch.select("vec_id", _emb_d().alias("e")).withColumn("nrm", _norm(F.col("e")))
     with _state_lock(assign_path):
+        recover_bucket_swap(assign_path)
         mp = _model_path(assign_path)
         if not os.path.exists(mp):
             seed = emb.filter(F.col("vec_id") < n_centroids).select(
@@ -115,9 +117,10 @@ def compact_assignments(spark: SparkSession, assign_path: str, files_per_cid: in
     Same protocol as the posting-table compaction
     (``streaming/postings.py::compact_partitioned_index``): distinct rows
     (dropping at-least-once replay duplicates), bounded files per cid,
-    staged rename swap under the single-writer fence shared with
-    ``ingest_batch_ivf`` (writer-safe; readers must tolerate a transient
-    missing table during the swap — see ``compact_postings``)."""
+    committed through the journaled swap under the single-writer fence
+    shared with ``ingest_batch_ivf``. A crash at any step heals to the new
+    lists on the next ingest or compaction, and a raw reader never lists
+    a partly replaced list (see ``compact_postings``)."""
     from cdc_postgresql_clickhouse_spark.streaming.postings import (
         compact_partitioned_index,
     )

@@ -46,7 +46,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from cdc_postgresql_clickhouse_spark.operators.cdc_transform import changes_to_state_updates
-from cdc_postgresql_clickhouse_spark.operators.state import upsert_changes_bucketed
+from cdc_postgresql_clickhouse_spark.operators.state import (
+    DEFAULT_KEY_BUCKETS,
+    upsert_changes_bucketed,
+)
 from cdc_postgresql_clickhouse_spark.sources.envelope import (
     CORRUPT_RECORD_COL,
     DLQ_REASON,
@@ -54,8 +57,6 @@ from cdc_postgresql_clickhouse_spark.sources.envelope import (
     is_dead_letter,
     with_corrupt_record,
 )
-
-DEFAULT_KEY_BUCKETS = 16
 
 
 def run_cdc_pipeline(
@@ -97,8 +98,11 @@ def run_cdc_pipeline(
     O(state). The rewritten buckets are published with the crash-atomic
     journaled bucket swap (``operators.state.write_state``). Size it so a
     bucket ~ an executor-comfortable rewrite unit (at 100 TB state:
-    thousands of buckets). On Delta the bucket machinery is replaced by
-    ``MERGE INTO`` (ACID, no swap needed).
+    thousands of buckets). The table records its count, and a batch
+    published in another count raises ``ValueError``: rebucket the table
+    with ``operators.state.compact_state(key_buckets=…)`` first. On Delta
+    the bucket machinery is replaced by ``MERGE INTO`` (ACID, no swap
+    needed).
 
     ``envelope_schema`` / ``extra_image_columns``: T4 schema evolution. A
     streaming source's schema is fixed at query start (as is Debezium's

@@ -28,8 +28,6 @@ extended to the retrieval-index domain; no analogue in the reference.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,11 +53,14 @@ def ingest_batch_postings(batch: DataFrame, postings_path: str) -> None:
     convention as ``streaming/dedup.py`` mutators) so a concurrent
     compaction cannot snapshot-and-swap between this batch's write and its
     visibility — without the lock, an append landing mid-compact would be
-    silently dropped by the directory swap."""
-    from cdc_postgresql_clickhouse_spark.operators.state import _state_lock
+    silently dropped by the swap. Under the lock it first rolls a torn
+    compaction forward (``recover_bucket_swap``), so the roll-forward never
+    replaces a shard this batch has just appended to."""
+    from cdc_postgresql_clickhouse_spark.operators.state import _state_lock, recover_bucket_swap
 
     p = build_postings(batch).withColumn("shard", term_shard(F.col("term")))
     with _state_lock(postings_path):
+        recover_bucket_swap(postings_path)
         p.write.mode("append").partitionBy("shard").parquet(postings_path)
 
 
@@ -105,15 +106,13 @@ def compact_postings(spark: SparkSession, postings_path: str, files_per_shard: i
     one side instead of silently dropping the appended segment (the search
     analogue of Lucene's merge lock / ClickHouse OPTIMIZE).
 
-    Rewrite protocol: stage the compacted table beside the live one, then
-    swap via two renames. WRITER safety is full (a crash mid-compact leaves
-    the live table or a complete staged copy, never a half-written shard);
-    READER safety is weaker than atomic — between the two renames the table
-    path transiently does not exist, and removing the old directory can
-    invalidate an in-flight scan holding handles to pre-compact segments.
-    Readers must tolerate a transient missing/relisted table (retry the
-    read); a fully lock-free reader protocol needs a versioned directory +
-    manifest pointer (what Delta/Iceberg provide)."""
+    The rewrite commits through the state tables' one journaled swap
+    (``compact_partitioned_index``): a crash at any step is rolled forward
+    by the next ingest or compaction, a raw reader never lists a partly
+    replaced shard, and the table path never goes missing. A scan already
+    running when its shard is replaced can still lose the files it opened
+    (lock-free readers need a versioned directory + manifest pointer, what
+    Delta/Iceberg provide)."""
     compact_partitioned_index(
         spark, postings_path, ["doc_id", "term", "tf", "shard"], "shard", files_per_shard
     )
@@ -128,24 +127,21 @@ def compact_partitioned_index(
 ) -> None:
     """Shared segment-merge protocol for append-only partitioned index
     tables (posting shards, IVF inverted lists): distinct the logical rows,
-    rewrite each partition to ``files_per_part`` files, stage beside the
-    live table, swap via rename under the single-writer fence."""
-    import shutil
-
-    from cdc_postgresql_clickhouse_spark.operators.state import _state_lock
+    rewrite each partition to ``files_per_part`` files and commit the new
+    table under the single-writer fence through the journaled swap
+    (``operators.state.recover_bucket_swap``)."""
+    from cdc_postgresql_clickhouse_spark.operators.state import (
+        _state_lock,
+        _swap_in_partitions,
+        recover_bucket_swap,
+    )
 
     with _state_lock(path):
+        recover_bucket_swap(path)
         compacted = (
             spark.read.parquet(path)
             .select(*columns)
             .distinct()
             .repartition(files_per_part, part_col)
         )
-        staged = path.rstrip("/") + "_compacting"
-        shutil.rmtree(staged, ignore_errors=True)
-        compacted.write.partitionBy(part_col).parquet(staged)
-        old = path.rstrip("/") + "_old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(path, old)
-        os.rename(staged, path)
-        shutil.rmtree(old, ignore_errors=True)
+        _swap_in_partitions(path, compacted, part_col, None, drop_rest=True)

@@ -80,8 +80,12 @@ def test_compact_state_preserves_rows(spark, sf_dir, tmp_path):
 def test_compacted_pipeline_table_keeps_its_unique_key(spark, tmp_path):
     """Compaction passes the pipeline table's recorded key through: the
     compacted table still reads with no arg-max and returns the same rows.
-    The key is recorded with the bucket count, so a later batch published
-    on a different bucket count drops it, and reads take the arg-max."""
+    The table records its new bucket count, so a later batch published on
+    a different count is refused; once the table is compacted back to that
+    count, the batch lands and the key is still recorded."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
     from cdc_postgresql_clickhouse_spark.operators.state import (
         _unique_key,
         current_state,
@@ -107,8 +111,11 @@ def test_compacted_pipeline_table_keeps_its_unique_key(spark, tmp_path):
 
     with open(envdir / "batch1.json", "w") as f:
         f.write(json.dumps(events[-1]) + "\n")
+    with pytest.raises(StreamingQueryException, match=r"compact_state\(.*key_buckets=16\)"):
+        run_cdc_pipeline(spark, str(envdir), state, ckpt, key_buckets=16)
+    compact_state(spark, state, key_buckets=16)
     run_cdc_pipeline(spark, str(envdir), state, ckpt, key_buckets=16)
-    assert _unique_key(read_state(spark, state)) is None
+    assert _unique_key(read_state(spark, state)) == ("booking_id",)
     assert current_state(read_state(spark, state)).count() == 6  # golden final
 
 
