@@ -23,7 +23,7 @@ from cdc_postgresql_clickhouse_spark.queries.similarity import (
     ORACLE as _SIM_ORACLE,
     ann_bruteforce_topk,
 )
-from cdc_postgresql_clickhouse_spark.queries.text import _trunc6
+from cdc_postgresql_clickhouse_spark.queries.tpch import _trunc6
 from cdc_postgresql_clickhouse_spark.sources.registry import load_table
 from cdc_postgresql_clickhouse_spark.queries._pending import flip_pending
 

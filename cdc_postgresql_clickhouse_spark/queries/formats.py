@@ -54,6 +54,7 @@ def _agg(df: DataFrame) -> DataFrame:
 
 
 def _materialized(df: DataFrame) -> DataFrame:
+    """Pin the result into executor blocks so temp files can be removed."""
     return df.localCheckpoint(eager=True)
 
 

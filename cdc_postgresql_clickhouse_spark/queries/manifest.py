@@ -47,7 +47,7 @@ from cdc_postgresql_clickhouse_spark.queries.quality import (
     MIN_STOPWORDS,
     MIN_WORDS,
 )
-from cdc_postgresql_clickhouse_spark.queries.text import _trunc6
+from cdc_postgresql_clickhouse_spark.queries.tpch import _trunc6
 from cdc_postgresql_clickhouse_spark.queries.training import (
     _sql_ngrams,
     _t6,

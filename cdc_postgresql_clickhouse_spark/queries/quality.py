@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from cdc_postgresql_clickhouse_spark.functions.text import STOPWORDS, tokens
 from cdc_postgresql_clickhouse_spark.queries.dedup import _SQL_TOKENS
-from cdc_postgresql_clickhouse_spark.queries.text import _trunc6
+from cdc_postgresql_clickhouse_spark.queries.tpch import _trunc6
 from cdc_postgresql_clickhouse_spark.sources.registry import load_table
 from cdc_postgresql_clickhouse_spark.queries._pending import flip_pending
 

@@ -54,6 +54,7 @@ from cdc_postgresql_clickhouse_spark.queries.dedup import (
     _SQL_MINHASH_CTES,
     _SQL_MINHASH_SELECT,
 )
+from cdc_postgresql_clickhouse_spark.queries.formats import _materialized
 from cdc_postgresql_clickhouse_spark.sources.registry import load_table
 from cdc_postgresql_clickhouse_spark.queries._pending import flip_pending
 
@@ -61,11 +62,6 @@ COPY_MOD = 9
 COPY_RESIDUE = 4
 COPY_OFFSET = 5_000_000
 SENTINEL_TYPE = "__sentinel__"
-
-
-def _materialized(df: DataFrame) -> DataFrame:
-    """Pin the result into executor blocks so temp files can be removed."""
-    return df.localCheckpoint(eager=True)
 
 
 def _backdate_batch(files: list[str], seconds: float = 10.0) -> None:
@@ -979,6 +975,7 @@ def streaming_dlq_replay_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         current_state,
         read_state,
     )
+    from cdc_postgresql_clickhouse_spark.sources.envelope import DLQ_SCHEMA
     from cdc_postgresql_clickhouse_spark.streaming.pipeline import run_cdc_pipeline
 
     ev = load_table(spark, sf_dir, "events")
@@ -1002,7 +999,7 @@ def streaming_dlq_replay_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             key_buckets=8, max_files_per_trigger=1, dlq_path=dlq,
         )
         # the fix: strip the garbage prefix from the quarantined raw bytes
-        dead = spark.read.json(dlq).select(
+        dead = spark.read.schema(DLQ_SCHEMA).json(dlq).select(
             F.regexp_replace("raw_value", "^CORRUPT!", "").alias("value")
         )
         dead.coalesce(1).write.text(fixed_dir)

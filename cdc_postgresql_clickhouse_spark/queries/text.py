@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 from cdc_postgresql_clickhouse_spark.functions.text import STOPWORDS, normalized_text, tokens
 from cdc_postgresql_clickhouse_spark.sources.registry import load_table
 from cdc_postgresql_clickhouse_spark.queries._pending import flip_pending
+from cdc_postgresql_clickhouse_spark.queries.tpch import _trunc6
 
 # DuckDB twin of functions.text.tokens (keep in sync).
 SQL_TOKENS = (
@@ -31,12 +32,6 @@ LANG_MARKERS = {
     "fr": ("le", "la", "et"),
     "es": ("el", "los", "y"),
 }
-
-
-def _trunc6(col) -> F.Column:
-    """FLOOR-based 6-decimal truncation — bit-identical across engines on
-    identical doubles, unlike ROUND (see queries/tpch.py)."""
-    return F.floor(col * F.lit(1000000.0)).cast("double") / F.lit(1000000.0)
 
 
 def _n_in(toks, words) -> F.Column:

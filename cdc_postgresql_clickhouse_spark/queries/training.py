@@ -34,7 +34,7 @@ from cdc_postgresql_clickhouse_spark.queries.dedup import (
     _corpus,
 )
 from cdc_postgresql_clickhouse_spark.queries.similarity import DIM, _SQL_EMB, _emb_d
-from cdc_postgresql_clickhouse_spark.queries.text import _trunc6
+from cdc_postgresql_clickhouse_spark.queries.tpch import _trunc6
 from cdc_postgresql_clickhouse_spark.sources.registry import load_table
 from cdc_postgresql_clickhouse_spark.queries._pending import flip_pending
 

@@ -72,6 +72,17 @@ CORRUPT_RECORD_COL = "_corrupt_record"
 
 DLQ_REASON = "unparseable envelope or missing or unknown op"
 
+#: the dead-letter row both DLQ writers produce (``run_cdc_pipeline``'s JSON
+#: sink, ``decode_json_envelopes_with_dlq``'s dead frame): the raw record
+#: text, kept for replay-after-fix, and the verdict. Read a DLQ with it, not
+#: by JSON inference, which scans every DLQ file once more.
+DLQ_SCHEMA = StructType(
+    [
+        StructField("raw_value", StringType()),
+        StructField("dlq_reason", StringType()),
+    ]
+)
+
 
 def with_corrupt_record(schema: StructType) -> StructType:
     """``schema`` plus the parser's corrupt-record column (a copy —

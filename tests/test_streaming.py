@@ -310,3 +310,34 @@ def test_salvaged_corrupt_envelope_is_a_dead_letter_at_both_decoders(spark, tmp_
     rows = valid.collect()
     assert [r["op"] for r in rows] == ["r"]
     assert "_corrupt_record" not in valid.columns
+
+
+def test_dlq_reads_back_under_its_schema(spark, tmp_path):
+    """Both DLQ writers produce ``DLQ_SCHEMA`` rows, so a DLQ reads back
+    under it (no JSON inference pass) with every raw record kept."""
+    from cdc_postgresql_clickhouse_spark.sources.envelope import (
+        DLQ_REASON,
+        DLQ_SCHEMA,
+        decode_json_envelopes_with_dlq,
+    )
+
+    env_dir = str(tmp_path / "envelopes")
+    os.makedirs(env_dir)
+    bad = ['{"broken json', '{"valid": "json, but not an envelope"}', _SALVAGED, _TRUNCATED]
+    with open(os.path.join(env_dir, "batch.json"), "w") as f:
+        for e in golden_workload_envelopes():
+            f.write(json.dumps(e) + "\n")
+        for line in bad:
+            f.write(line + "\n")
+    dlq = str(tmp_path / "dlq")
+    run_cdc_pipeline(spark, env_dir, str(tmp_path / "state"), str(tmp_path / "ckpt"), dlq_path=dlq)
+    dead = spark.read.schema(DLQ_SCHEMA).json(dlq)
+    assert sorted(spark.read.json(dlq).columns) == sorted(DLQ_SCHEMA.fieldNames())
+    rows = dead.collect()
+    assert len(rows) == len(bad)
+    assert all(r.raw_value is not None and r.dlq_reason == DLQ_REASON for r in rows)
+
+    raw = spark.createDataFrame([(line,) for line in bad], "value string")
+    _, decoded_dead = decode_json_envelopes_with_dlq(raw)
+    shape = [(f.name, f.dataType) for f in decoded_dead.schema.fields]
+    assert shape == [(f.name, f.dataType) for f in DLQ_SCHEMA.fields]
