@@ -36,6 +36,11 @@ goes missing. The versioned MV (``streaming.mvstore``) is the one other
 protocol: its lock-free readers pin a version directory, which an
 in-place swap cannot give them.
 
+A writer whose per-key merge is NOT idempotent (the streamed folds, the
+MV key tables) gets exactly-once from ``fenced_bucket_ingest``: every row
+carries the batch id that last wrote its bucket, and a replayed batch is
+applied only to the touched buckets still behind it.
+
 Version semantics, NOT event time (survey ST2): a late event simply loses the
 max-version contest; no watermarks. Idempotent under at-least-once replay
 (``clickhouse_sink_configuration.json:13``) because arg-max over a multiset
@@ -59,6 +64,7 @@ import json
 import os
 import shutil
 import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -303,50 +309,24 @@ def _bucketed(df: DataFrame, key_cols: tuple[str, ...], key_buckets: int) -> Dat
     return df.repartition(_publish_partitions(df.sparkSession, key_buckets), BUCKET_COL)
 
 
+def _observed(df: DataFrame, *aggs) -> dict:
+    """``aggs`` over ``df``'s rows in ONE Spark job with no shuffle: a
+    ``noop`` write observes them, and the scan tasks build them in
+    accumulators. The ``Observation`` is unnamed (a fresh generated name per
+    call), so two calls on frames that share lineage never clash."""
+    obs = Observation()
+    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
 def _touched_buckets(
     df: DataFrame, key_cols: tuple[str, ...], n_buckets: int
 ) -> list[int]:
-    """The sorted distinct key-hash buckets of ``df``'s rows, in ONE Spark
-    job with no shuffle: a ``noop`` write of the bucket ids observes their
-    ``collect_set``, which the scan tasks build in accumulators — bounded
-    by ``n_buckets``, never by data. The ``Observation`` is unnamed (a
-    fresh generated name per call), so two calls on frames that share
-    lineage never clash."""
-    obs = Observation()
-    (
-        df.select(_bucket_expr(key_cols, n_buckets).alias("bk"))
-        .observe(obs, F.collect_set("bk").alias("bk"))
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    return sorted(obs.get["bk"])
-
-
-def _unfenced_buckets_keyed(
-    state: DataFrame | None,
-    touched: list[int],
-    batch_id: int,
-    key_buckets: int,
-    key_cols: tuple[str, ...],
-) -> list[int]:
-    """The per-bucket replay fence: the touched buckets whose rows are still
-    behind ``batch_id`` (``state`` carries an ``applied_bid`` column). Every
-    row of a bucket carries the same ``applied_bid`` — ``write_state`` swaps
-    each bucket directory in with an atomic rename, so a bucket is wholly
-    old or wholly new even across a crash. A touched bucket with NO rows
-    has never committed at all, so it is unfenced."""
-    if state is None:
-        return list(touched)
-    fenced = {
-        r["bk"]
-        for r in state.select(_bucket_expr(key_cols, key_buckets).alias("bk"), "applied_bid")
-        .groupBy("bk")
-        .agg(F.min("applied_bid").alias("mb"))
-        .filter(F.col("mb") >= int(batch_id))
-        .collect()
-    }
-    return [bk for bk in touched if bk not in fenced]
+    """The sorted distinct key-hash buckets of ``df``'s rows, observed as a
+    ``collect_set`` (``_observed``: one job, no shuffle) — bounded by
+    ``n_buckets``, never by data."""
+    bk = df.select(_bucket_expr(key_cols, n_buckets).alias("bk"))
+    return sorted(_observed(bk, F.collect_set("bk").alias("bk"))["bk"])
 
 
 _SWAP_JOURNAL = "_state_swap_journal.json"
@@ -689,6 +669,74 @@ def upsert_changes_bucketed(
             merged, path, key_buckets=key_buckets, key_cols=key_cols, one_row_per_key=True
         )
     return touched
+
+
+def fenced_bucket_ingest(
+    spark: SparkSession,
+    batch: DataFrame,
+    path: str,
+    batch_id: int,
+    key_cols: tuple[str, ...],
+    key_buckets: int,
+    state_schema: str,
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> None:
+    """Exactly-once ingest of one micro-batch into a bucketed table through
+    a NON-idempotent per-key ``merge`` (a fold, a delta-emitting MV): the
+    idempotent sink keyed by batch id of Structured Streaming's
+    foreachBatch, made safe against a commit torn between buckets.
+
+    Every row carries the ``applied_bid`` of the batch that last wrote its
+    bucket. The journaled swap of ``write_state`` makes each bucket wholly
+    old or wholly new even across a crash, so all rows of a bucket carry one
+    id. Steps, the last four under the path's state lock:
+
+    1. observe the touched buckets (``_touched_buckets``); none: return;
+    2. read only those buckets;
+    3. the per-bucket fence, in one pass over them (``_observed``): a
+       touched bucket is behind when it has no rows (it never committed) or
+       a row behind ``batch_id``. None behind: the batch is a replay of a
+       committed one, return;
+    4. a partial commit (some touched buckets fenced, some behind) re-applies
+       the batch to the laggard buckets only — exact, because the merge is
+       per key and so per bucket; a whole-batch skip would lose their
+       events, a whole-batch re-apply would double-merge the others;
+    5. ``merge(batch, state)`` and the bucket publish of its result, with
+       ``applied_bid`` appended last.
+
+    ``state_schema`` is the DDL of the state's non-key columns. ``merge``
+    gets the state as the key columns then those, without ``applied_bid``;
+    before the first commit that is an empty frame of the same columns, so
+    a merge needs no first-batch branch. It returns the touched buckets'
+    complete new state (key columns included). The state is read lazily:
+    ``write_state`` stages the publish before it swaps, so no read of the
+    old buckets can see the new ones."""
+    touched = _touched_buckets(batch, key_cols, key_buckets)
+    if not touched:
+        return
+    cols = StructType.fromDDL(state_schema)
+    bucket = _bucket_expr(key_cols, key_buckets)
+    with _state_lock(path):
+        state = read_state(spark, path, buckets=touched)
+        if state is None:
+            nulls = (F.lit(None).cast(f.dataType).alias(f.name) for f in cols.fields)
+            state = batch.select(*key_cols, *nulls).where(F.lit(False))
+        else:
+            seen = _observed(
+                state.select(bucket.alias("bk"), "applied_bid"),
+                F.collect_set("bk").alias("present"),
+                F.collect_set(F.when(F.col("applied_bid") < int(batch_id), F.col("bk"))).alias("behind"),
+            )
+            fenced = set(seen["present"]) - set(seen["behind"])
+            laggards = [bk for bk in touched if bk not in fenced]
+            if not laggards:
+                return  # at-least-once replay: every touched bucket committed
+            if len(laggards) < len(touched):
+                batch = batch.filter(bucket.isin(laggards))
+                state = state.filter(bucket.isin(laggards))
+            state = state.select(*key_cols, *cols.names)
+        out = merge(batch, state).withColumn("applied_bid", F.lit(int(batch_id)).cast("long"))
+        write_state(out, path, key_buckets=key_buckets, key_cols=key_cols)
 
 
 def compact_state(

@@ -75,12 +75,11 @@ def ingest_batch(
     with _state_lock(state_path):
         state = read_state(spark, state_path, buckets=touched)
         if state is not None:
-            # localCheckpoint: the publish below must not read its own input
             state = state.select(
                 "content_hash",
                 F.col("keep_doc").alias("state_keep"),
                 F.col("n_docs").alias("state_n"),
-            ).localCheckpoint(eager=True)
+            )
         batch_agg = fp.groupBy("content_hash").agg(
             F.min("doc_id").alias("batch_keep"),
             F.count(F.lit(1)).alias("batch_n"),
@@ -281,7 +280,7 @@ def ingest_batch_minhash(
         )
         sbuckets = _touched_buckets(shs, ("doc_id",), key_buckets)
         own = read_state(spark, docs_state_path, buckets=sbuckets)
-        merged_store = shs if own is None else own.localCheckpoint(eager=True).unionByName(shs)
+        merged_store = shs if own is None else own.unionByName(shs)
         write_state(
             merged_store.dropDuplicates(["doc_id"]),
             docs_state_path,
@@ -298,32 +297,21 @@ def run_incremental_minhash(
     pair_log_path: str,
     checkpoint_dir: str,
     key_buckets: int = DEFAULT_FP_BUCKETS,
-    max_files_per_trigger: int | None = None,
+    max_files_per_trigger: int = 1,
 ) -> None:
     """Structured-Streaming driver for the near-dup ingest (parquet source of
     (doc_id, text); availableNow drain)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
+    from cdc_postgresql_clickhouse_spark.streaming.sketch import _drain
 
-    src_schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
+    _drain(
+        spark,
+        docs_dir,
+        lambda b, _i: ingest_batch_minhash(
+            spark, b, bands_state_path, docs_state_path, pair_log_path, key_buckets
+        ),
+        checkpoint_dir,
+        max_files_per_trigger,
     )
-    reader = spark.readStream.schema(src_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_batch_minhash(
-            spark, batch_df, bands_state_path, docs_state_path, pair_log_path, key_buckets
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def run_incremental_dedup(
@@ -333,30 +321,18 @@ def run_incremental_dedup(
     dup_log_path: str,
     checkpoint_dir: str,
     key_buckets: int = DEFAULT_FP_BUCKETS,
-    max_files_per_trigger: int | None = None,
-    schema=None,
+    max_files_per_trigger: int = 1,
 ) -> None:
     """Structured-Streaming driver: parquet directory of (doc_id, text) →
     per-micro-batch ``ingest_batch``. ``availableNow`` drains the backlog
     batch-by-batch (``maxFilesPerTrigger`` bounds batch size); swap the
     source for Kafka exactly as in ``streaming/pipeline.py``."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
+    from cdc_postgresql_clickhouse_spark.streaming.sketch import _drain
 
-    src_schema = schema or StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
+    _drain(
+        spark,
+        docs_dir,
+        lambda b, _i: ingest_batch(spark, b, state_path, dup_log_path, key_buckets),
+        checkpoint_dir,
+        max_files_per_trigger,
     )
-    reader = spark.readStream.schema(src_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_batch(spark, batch_df, state_path, dup_log_path, key_buckets)
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -19,18 +19,20 @@ fold state):
   journaled bucket swap (rename per bucket, so a bucket is never
   half-old/half-new, and a swap torn by a crash is rolled forward by the
   next ``read_state``).
-- exactly-once: foreachBatch replays deliver the SAME batch id, so every
-  state row carries ``applied_bid`` and the ingest FENCES PER BUCKET
-  (``_unfenced_buckets_keyed``) — the batch is applied only to touched
-  buckets whose recorded id is behind the incoming one. A crash after
-  some bucket renames leaves buckets at mixed batch ids (each bucket
-  whole), so a single max-fence over all touched buckets would skip the
-  replay and lose the laggard buckets' events forever. Folds are
-  independent per key (hence per bucket), so applying the replayed batch
-  to ONLY the laggard buckets is exact; buckets already at the incoming
-  batch id are left untouched. This is the standard idempotent-sink recipe for
-  non-idempotent merges (Structured Streaming programming guide,
-  foreachBatch exactly-once section), made partial-commit-safe.
+- exactly-once: foreachBatch replays deliver the SAME batch id, and every
+  fold runs through ``operators.state.fenced_bucket_ingest``, which FENCES
+  PER BUCKET on the ``applied_bid`` each state row carries: the batch is
+  applied only to touched buckets whose recorded id is behind the
+  incoming one. A crash after some bucket renames leaves buckets at mixed
+  batch ids (each bucket whole), so a single max-fence over all touched
+  buckets would skip the replay and lose the laggard buckets' events
+  forever. Folds are independent per key (hence per bucket), so applying
+  the replayed batch to ONLY the laggard buckets is exact; buckets already
+  at the incoming batch id are left untouched. This is the standard
+  idempotent-sink recipe for non-idempotent merges (Structured Streaming
+  programming guide, foreachBatch exactly-once section), made
+  partial-commit-safe. Each fold here is only its merge: the batch and the
+  touched buckets' state in, their new state out.
 - ORDERED-ARRIVAL CONTRACT: a fold consumes its stream in order, so every
   batch row's (us, eid) must exceed the state's (last_us, last_eid) for
   its key — the contract a time-partitioned source (Kafka per-key order,
@@ -47,18 +49,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_postgresql_clickhouse_spark.operators.state import (
-    _bucket_expr,
-    _state_lock,
-    _touched_buckets,
-    _unfenced_buckets_keyed,
+    fenced_bucket_ingest,
     read_state,
-    write_state,
 )
 
 FOLD_BUCKETS = 8
-_STATE_COLS = (
-    "user_id", "n_events", "last_us", "last_eid", "last_c", "acc", "applied_bid"
-)
 
 
 def _ewma_step(acc, s):
@@ -74,42 +69,14 @@ def ingest_batch_ewma(
     key_buckets: int = FOLD_BUCKETS,
 ) -> None:
     """Fold one micro-batch of (user_id, us, eid, c) rows into the state."""
-    b = batch.select("user_id", "us", "eid", "c")
-    touched = _touched_buckets(b, ("user_id",), key_buckets)
-    if not touched:
-        return
-    with _state_lock(state_path):
-        state = read_state(spark, state_path, buckets=touched)
-        if state is not None:
-            # eager: the bucket swap below must never read its input
-            state = state.select(*_STATE_COLS).localCheckpoint(eager=True)
-        unfenced = _unfenced_buckets_keyed(
-            state, touched, batch_id, key_buckets, ("user_id",)
-        )
-        if not unfenced:
-            return  # at-least-once replay: every touched bucket committed
-        if len(unfenced) < len(touched):
-            # partial prior commit: re-apply ONLY to the laggard buckets
-            bexpr = _bucket_expr(("user_id",), key_buckets)
-            b = b.filter(bexpr.isin(unfenced))
-            if state is not None:
-                # an empty filtered state joins like no state at all (the
-                # fold's null-acc branch), so no special-casing needed
-                state = state.filter(bexpr.isin(unfenced)).localCheckpoint(eager=True)
+
+    def merge(b: DataFrame, state: DataFrame) -> DataFrame:
         arr = b.groupBy("user_id").agg(
             F.sort_array(
                 F.collect_list(F.struct("us", "eid", "c"))
             ).alias("a")
         )
-        if state is None:
-            joined = arr.select(
-                "user_id", "a",
-                *(F.lit(None).cast("long").alias(c) for c in _STATE_COLS[1:-2]),
-                F.lit(None).cast("double").alias("acc"),
-                F.lit(None).cast("long").alias("applied_bid"),
-            )
-        else:
-            joined = arr.join(state, "user_id", "full_outer")
+        joined = arr.join(state, "user_id", "full_outer")
         a = F.col("a")
         seeded = F.aggregate(a, F.col("acc"), _ewma_step)
         fresh = F.aggregate(
@@ -123,7 +90,7 @@ def ingest_batch_ewma(
             .otherwise(fresh)
         )
         batch_n = F.when(a.isNull(), F.lit(0)).otherwise(F.size(a)).cast("long")
-        out = joined.select(
+        return joined.select(
             "user_id",
             (F.coalesce(F.col("n_events"), F.lit(0)) + batch_n)
             .cast("long").alias("n_events"),
@@ -137,11 +104,14 @@ def ingest_batch_ewma(
             .otherwise(F.element_at(a, -1).getField("c"))
             .cast("long").alias("last_c"),
             new_acc.alias("acc"),
-            F.lit(int(batch_id)).cast("long").alias("applied_bid"),
         )
-        write_state(
-            out, state_path, key_buckets=key_buckets, key_cols=("user_id",)
-        )
+
+    fenced_bucket_ingest(
+        spark, batch.select("user_id", "us", "eid", "c"), state_path, batch_id,
+        ("user_id",), key_buckets,
+        "n_events long, last_us long, last_eid long, last_c long, acc double",
+        merge,
+    )
 
 
 def read_ewma(spark: SparkSession, state_path: str) -> DataFrame | None:
@@ -180,18 +150,13 @@ def run_incremental_ewma(
 
 # --- second fold instance: capped sessionization -----------------------------
 #
-# The same ingest recipe (touched-bucket read, batch-id fence, continue
+# The same fenced ingest (touched-bucket read, batch-id fence, continue
 # the fold from stored state, journaled bucket swap) applied to the
 # ALL-INTEGER session-counting fold of
 # ``queries/events.py::events_sessionize_capped`` — demonstrating the
 # sink pattern is not EWMA-specific: any left fold whose per-key state
 # fits a fixed struct streams this way under the ordered-arrival
 # contract. State: (prev_es, start_es, n_capped, n_gap) + n_events.
-
-_SESS_STATE_COLS = (
-    "user_id", "n_events", "prev_es", "start_es", "n_capped", "n_gap", "applied_bid"
-)
-
 
 def ingest_batch_sessions(
     spark: SparkSession,
@@ -204,67 +169,39 @@ def ingest_batch_sessions(
     sessionization state."""
     from cdc_postgresql_clickhouse_spark.queries.events import SESS_CAP_S, SESS_GAP_S
 
-    b = batch.select("user_id", "es", "eid")
-    touched = _touched_buckets(b, ("user_id",), key_buckets)
-    if not touched:
-        return
-    with _state_lock(state_path):
-        state = read_state(spark, state_path, buckets=touched)
-        if state is not None:
-            state = state.select(*_SESS_STATE_COLS).localCheckpoint(eager=True)
-        unfenced = _unfenced_buckets_keyed(
-            state, touched, batch_id, key_buckets, ("user_id",)
+    def step(acc, s):
+        es = s.getField("es")
+        capped = (es - F.element_at(acc, 1) > SESS_GAP_S) | (
+            es - F.element_at(acc, 2) > SESS_CAP_S
         )
-        if not unfenced:
-            return  # at-least-once replay: every touched bucket committed
-        if len(unfenced) < len(touched):
-            bexpr = _bucket_expr(("user_id",), key_buckets)
-            b = b.filter(bexpr.isin(unfenced))
-            if state is not None:
-                state = state.filter(bexpr.isin(unfenced)).localCheckpoint(eager=True)
+        gap = es - F.element_at(acc, 1) > SESS_GAP_S
+        return F.array(
+            es,
+            F.when(capped, es).otherwise(F.element_at(acc, 2)),
+            F.element_at(acc, 3) + F.when(capped, 1).otherwise(0),
+            F.element_at(acc, 4) + F.when(gap, 1).otherwise(0),
+        )
+
+    def merge(b: DataFrame, state: DataFrame) -> DataFrame:
         arr = b.groupBy("user_id").agg(
             F.sort_array(F.collect_list(F.struct("es", "eid"))).alias("a")
         )
-        if state is None:
-            joined = arr.select(
-                "user_id", "a",
-                *(F.lit(None).cast("long").alias(c) for c in _SESS_STATE_COLS[1:]),
-            )
-        else:
-            joined = arr.join(state, "user_id", "full_outer")
+        joined = arr.join(state, "user_id", "full_outer")
         a = F.col("a")
-
-        def step(acc, s):
-            es = s.getField("es")
-            capped = (es - F.element_at(acc, 1) > SESS_GAP_S) | (
-                es - F.element_at(acc, 2) > SESS_CAP_S
-            )
-            gap = es - F.element_at(acc, 1) > SESS_GAP_S
-            return F.array(
-                es,
-                F.when(capped, es).otherwise(F.element_at(acc, 2)),
-                F.element_at(acc, 3) + F.when(capped, 1).otherwise(0),
-                F.element_at(acc, 4) + F.when(gap, 1).otherwise(0),
-            )
-
         e1 = F.element_at(a, 1).getField("es")
         fresh = F.aggregate(
             F.slice(a, 2, F.greatest(F.size(a) - 1, F.lit(0))),
             F.array(e1, e1, F.lit(1).cast("long"), F.lit(1).cast("long")),
             step,
         )
-        seeded = F.aggregate(
-            a,
-            F.array(F.col("prev_es"), F.col("start_es"), F.col("n_capped"), F.col("n_gap")),
-            step,
-        )
+        stored = F.array(F.col("prev_es"), F.col("start_es"), F.col("n_capped"), F.col("n_gap"))
         folded = (
-            F.when(a.isNull(), F.array(F.col("prev_es"), F.col("start_es"), F.col("n_capped"), F.col("n_gap")))
-            .when(F.col("prev_es").isNotNull(), seeded)
+            F.when(a.isNull(), stored)
+            .when(F.col("prev_es").isNotNull(), F.aggregate(a, stored, step))
             .otherwise(fresh)
         )
         batch_n = F.when(a.isNull(), F.lit(0)).otherwise(F.size(a)).cast("long")
-        out = joined.select(
+        return joined.select(
             "user_id",
             (F.coalesce(F.col("n_events"), F.lit(0)) + batch_n)
             .cast("long").alias("n_events"),
@@ -272,11 +209,14 @@ def ingest_batch_sessions(
             F.element_at(folded, 2).cast("long").alias("start_es"),
             F.element_at(folded, 3).cast("long").alias("n_capped"),
             F.element_at(folded, 4).cast("long").alias("n_gap"),
-            F.lit(int(batch_id)).cast("long").alias("applied_bid"),
         )
-        write_state(
-            out, state_path, key_buckets=key_buckets, key_cols=("user_id",)
-        )
+
+    fenced_bucket_ingest(
+        spark, batch.select("user_id", "es", "eid"), state_path, batch_id,
+        ("user_id",), key_buckets,
+        "n_events long, prev_es long, start_es long, n_capped long, n_gap long",
+        merge,
+    )
 
 
 def read_sessions(spark: SparkSession, state_path: str) -> DataFrame | None:
@@ -328,12 +268,6 @@ def run_incremental_sessions(
 # Same bucketed / per-bucket-fenced / ordered-arrival recipe as the EWMA
 # and session folds — state is |event types| rows.
 
-_CUSUM_STATE_COLS = (
-    "k", "n_events", "last_es", "last_eid", "target", "h",
-    "p", "minp", "n_alarms", "max_s", "applied_bid",
-)
-
-
 def ingest_batch_cusum(
     spark: SparkSession,
     batch: DataFrame,
@@ -352,55 +286,33 @@ def ingest_batch_cusum(
     missing = seen - set(calib)
     if missing:
         raise ValueError(f"CUSUM ingest: keys without calibration: {sorted(missing)}")
-    touched = _touched_buckets(b, ("k",), key_buckets)
-    if not touched:
-        return
     tgt_map = F.create_map(
         *[F.lit(x) for kv in calib.items() for x in (kv[0], int(kv[1][0]))]
     )
     h_map = F.create_map(
         *[F.lit(x) for kv in calib.items() for x in (kv[0], int(kv[1][1]))]
     )
-    with _state_lock(state_path):
-        state = read_state(spark, state_path, buckets=touched)
-        if state is not None:
-            state = state.select(*_CUSUM_STATE_COLS).localCheckpoint(eager=True)
-        unfenced = _unfenced_buckets_keyed(
-            state, touched, batch_id, key_buckets, ("k",)
+    target = F.coalesce(F.col("target"), tgt_map[F.col("k")]).cast("long")
+    h = F.coalesce(F.col("h"), h_map[F.col("k")]).cast("long")
+
+    def step(acc, s):
+        # acc = [p, minp, n_alarms, max_s]; target via closure column
+        p2 = F.element_at(acc, 1) + (s.getField("c") - target)
+        minp2 = F.least(F.element_at(acc, 2), p2)
+        s_t = p2 - F.least(F.lit(0).cast("long"), minp2)
+        return F.array(
+            p2,
+            minp2,
+            F.element_at(acc, 3) + F.when(s_t > h, 1).otherwise(0),
+            F.greatest(F.element_at(acc, 4), s_t),
         )
-        if not unfenced:
-            return  # at-least-once replay: every touched bucket committed
-        if len(unfenced) < len(touched):
-            bexpr = _bucket_expr(("k",), key_buckets)
-            b = b.filter(bexpr.isin(unfenced))
-            if state is not None:
-                state = state.filter(bexpr.isin(unfenced)).localCheckpoint(eager=True)
+
+    def merge(b: DataFrame, state: DataFrame) -> DataFrame:
         arr = b.groupBy("k").agg(
             F.sort_array(F.collect_list(F.struct("es", "eid", "c"))).alias("a")
         )
-        if state is None:
-            joined = arr.select(
-                "k", "a",
-                *(F.lit(None).cast("long").alias(c) for c in _CUSUM_STATE_COLS[1:]),
-            )
-        else:
-            joined = arr.join(state, "k", "full_outer")
+        joined = arr.join(state, "k", "full_outer")
         a = F.col("a")
-        target = F.coalesce(F.col("target"), tgt_map[F.col("k")]).cast("long")
-        h = F.coalesce(F.col("h"), h_map[F.col("k")]).cast("long")
-
-        def step(acc, s):
-            # acc = [p, minp, n_alarms, max_s]; target via closure column
-            p2 = F.element_at(acc, 1) + (s.getField("c") - target)
-            minp2 = F.least(F.element_at(acc, 2), p2)
-            s_t = p2 - F.least(F.lit(0).cast("long"), minp2)
-            return F.array(
-                p2,
-                minp2,
-                F.element_at(acc, 3) + F.when(s_t > h, 1).otherwise(0),
-                F.greatest(F.element_at(acc, 4), s_t),
-            )
-
         # fresh keys start from the empty prefix: p=0, minp=+inf (first step
         # makes minp = P_1), counters zero. A huge literal stands in for
         # +inf safely: |P| < 2^40 on any realistic cents stream.
@@ -410,20 +322,14 @@ def ingest_batch_cusum(
             F.lit(0).cast("long"),
             F.lit(0).cast("long"),
         )
-        seeded = F.aggregate(
-            a,
-            F.array(F.col("p"), F.col("minp"), F.col("n_alarms"), F.col("max_s")),
-            step,
-        )
-        fresh = F.aggregate(a, fresh_init, step)
+        stored = F.array(F.col("p"), F.col("minp"), F.col("n_alarms"), F.col("max_s"))
         folded = (
-            F.when(a.isNull(),
-                   F.array(F.col("p"), F.col("minp"), F.col("n_alarms"), F.col("max_s")))
-            .when(F.col("p").isNotNull(), seeded)
-            .otherwise(fresh)
+            F.when(a.isNull(), stored)
+            .when(F.col("p").isNotNull(), F.aggregate(a, stored, step))
+            .otherwise(F.aggregate(a, fresh_init, step))
         )
         batch_n = F.when(a.isNull(), F.lit(0)).otherwise(F.size(a)).cast("long")
-        out = joined.select(
+        return joined.select(
             "k",
             (F.coalesce(F.col("n_events"), F.lit(0)) + batch_n)
             .cast("long").alias("n_events"),
@@ -439,11 +345,14 @@ def ingest_batch_cusum(
             F.element_at(folded, 2).cast("long").alias("minp"),
             F.element_at(folded, 3).cast("long").alias("n_alarms"),
             F.element_at(folded, 4).cast("long").alias("max_s"),
-            F.lit(int(batch_id)).cast("long").alias("applied_bid"),
         )
-        write_state(
-            out, state_path, key_buckets=key_buckets, key_cols=("k",)
-        )
+
+    fenced_bucket_ingest(
+        spark, b, state_path, batch_id, ("k",), key_buckets,
+        "n_events long, last_es long, last_eid long, target long, h long, "
+        "p long, minp long, n_alarms long, max_s long",
+        merge,
+    )
 
 
 def read_cusum(spark: SparkSession, state_path: str) -> DataFrame | None:
@@ -493,9 +402,6 @@ def run_incremental_cusum(
 # ordered-arrival contract: min() absorbs late data exactly, which is why
 # entry cohorts are the safest streaming aggregate to maintain.
 
-_FIRST_STATE_COLS = ("user_id", "n_events", "first_us", "applied_bid")
-
-
 def ingest_batch_first_seen(
     spark: SparkSession,
     batch: DataFrame,
@@ -504,38 +410,15 @@ def ingest_batch_first_seen(
     key_buckets: int = FOLD_BUCKETS,
 ) -> None:
     """Fold one micro-batch of (user_id, us) rows into the first-seen state."""
-    b = batch.select("user_id", "us")
-    touched = _touched_buckets(b, ("user_id",), key_buckets)
-    if not touched:
-        return
-    with _state_lock(state_path):
-        state = read_state(spark, state_path, buckets=touched)
-        if state is not None:
-            state = state.select(*_FIRST_STATE_COLS).localCheckpoint(eager=True)
-        unfenced = _unfenced_buckets_keyed(
-            state, touched, batch_id, key_buckets, ("user_id",)
-        )
-        if not unfenced:
-            return
-        if len(unfenced) < len(touched):
-            bexpr = _bucket_expr(("user_id",), key_buckets)
-            b = b.filter(bexpr.isin(unfenced))
-            if state is not None:
-                state = state.filter(bexpr.isin(unfenced)).localCheckpoint(eager=True)
+
+    def merge(b: DataFrame, state: DataFrame) -> DataFrame:
         agg = b.groupBy("user_id").agg(
             F.count(F.lit(1)).cast("long").alias("bn"),
             F.min("us").cast("long").alias("bmin"),
         )
-        if state is None:
-            joined = agg.select(
-                "user_id", "bn", "bmin",
-                F.lit(None).cast("long").alias("n_events"),
-                F.lit(None).cast("long").alias("first_us"),
-            )
-        else:
-            joined = agg.join(state.drop("applied_bid"), "user_id", "full_outer")
+        joined = agg.join(state, "user_id", "full_outer")
         zero = F.lit(0).cast("long")
-        out = joined.select(
+        return joined.select(
             "user_id",
             (F.coalesce(F.col("n_events"), zero) + F.coalesce(F.col("bn"), zero))
             .cast("long").alias("n_events"),
@@ -543,11 +426,12 @@ def ingest_batch_first_seen(
                 F.coalesce(F.col("first_us"), F.col("bmin")),
                 F.coalesce(F.col("bmin"), F.col("first_us")),
             ).cast("long").alias("first_us"),
-            F.lit(int(batch_id)).cast("long").alias("applied_bid"),
         )
-        write_state(
-            out, state_path, key_buckets=key_buckets, key_cols=("user_id",)
-        )
+
+    fenced_bucket_ingest(
+        spark, batch.select("user_id", "us"), state_path, batch_id,
+        ("user_id",), key_buckets, "n_events long, first_us long", merge,
+    )
 
 
 def read_first_seen(spark: SparkSession, state_path: str) -> DataFrame | None:

@@ -14,10 +14,11 @@ per-touched-key pair swap: retract (old_a, old_b) if both were live, add
 retracts and re-adds the pair with the OTHER side's unchanged row — the
 cross-side coupling that makes join MVs harder than aggregate MVs.
 
-Design (state-in-the-table, ST3 posture; exactly-once by the MV's own
-atomically-published batch-id fence, ``streaming/mvstore.py``, with the
-idempotent key state simply re-applied on replay — same recipe and crash
-analysis as ``streaming/mv.py``):
+Design (state-in-the-table, ST3 posture; exactly-once as in
+``streaming/mv.py``: the key table goes through
+``operators.state.fenced_bucket_ingest``'s per-bucket fence, and its merge
+publishes the deltas under the MV's own batch-id fence,
+``mvstore.publish_mv_deltas``, before it returns the key rows):
 
 - ``keys/`` — one row per key holding BOTH sides' current (version,
   type, measure), bucketed by ``pmod(xxhash64(user_id), N)``; per batch
@@ -45,24 +46,15 @@ from pyspark.sql import functions as F
 
 from cdc_postgresql_clickhouse_spark.operators.state import (
     _state_lock,
-    _touched_buckets,
-    _unfenced_buckets_keyed,
-    read_state,
-    write_state,
+    fenced_bucket_ingest,
 )
 from cdc_postgresql_clickhouse_spark.streaming.mvstore import (
-    publish_mv_versioned,
+    publish_mv_deltas,
     read_mv_versioned,
 )
 
 JMV_BUCKETS = 8
 _TOMBSTONE = "error"
-_KEY_COLS = (
-    "user_id",
-    "a_us", "a_eid", "a_type", "a_cents",
-    "b_us", "b_eid", "b_type",
-    "applied_bid",
-)
 
 
 def _side_latest(b: DataFrame, parity: int, prefix: str) -> DataFrame:
@@ -95,60 +87,27 @@ def ingest_batch_join_mv(
     two-sided key state and the joined MV."""
     import os
 
-    b = batch.select("user_id", "us", "eid", "event_type", "cents")
-    touched = _touched_buckets(b, ("user_id",), key_buckets)
-    if not touched:
-        return
-    keys_path = os.path.join(state_path, "keys")
     mv_path = os.path.join(state_path, "mv")
-    with _state_lock(state_path):
-        # the MV's own fence (see mvstore.py) — resolved first, exactly as
-        # in streaming/mv.py, so replayed deltas can never double-apply
-        mv_old, mv_bid = read_mv_versioned(spark, mv_path)
-        if mv_old is not None:
-            mv_old = mv_old.localCheckpoint(eager=True)
-        prior = read_state(spark, keys_path, buckets=touched)
-        if prior is not None:
-            prior = prior.select(*_KEY_COLS).localCheckpoint(eager=True)
-        # replay of a FULLY committed batch is a no-op: the MV covers it and
-        # every touched key bucket is fenced (a touched bucket with no rows
-        # has not committed); a partially committed key write re-applies
-        # idempotently below
-        if int(batch_id) <= mv_bid and not _unfenced_buckets_keyed(
-            prior, touched, batch_id, key_buckets, ("user_id",)
-        ):
-            return
-        if prior is not None:
-            p = prior.select(
-                "user_id",
-                F.col("a_us").alias("p_a_us"), F.col("a_eid").alias("p_a_eid"),
-                F.col("a_type").alias("p_a_type"), F.col("a_cents").alias("p_a_cents"),
-                F.col("b_us").alias("p_b_us"), F.col("b_eid").alias("p_b_eid"),
-                F.col("b_type").alias("p_b_type"),
-            )
-        else:
-            p = None
+
+    def takes(bp: str, pp: str):
+        newer = F.struct(F.col(f"{bp}_us"), F.col(f"{bp}_eid")) > F.struct(
+            F.col(f"{pp}_us"), F.col(f"{pp}_eid")
+        )
+        return F.col(f"{bp}_us").isNotNull() & (
+            F.col(f"{pp}_us").isNull() | newer
+        )
+
+    def merge(b: DataFrame, prior: DataFrame) -> DataFrame:
+        p = prior.select(
+            "user_id",
+            F.col("a_us").alias("p_a_us"), F.col("a_eid").alias("p_a_eid"),
+            F.col("a_type").alias("p_a_type"), F.col("a_cents").alias("p_a_cents"),
+            F.col("b_us").alias("p_b_us"), F.col("b_eid").alias("p_b_eid"),
+            F.col("b_type").alias("p_b_type"),
+        )
         ba = _side_latest(b, 0, "ba")
         bb = _side_latest(b, 1, "bb")
-        j = ba.join(bb, "user_id", "full_outer")
-        if p is None:
-            for c, t in (
-                ("p_a_us", "long"), ("p_a_eid", "long"), ("p_a_type", "string"),
-                ("p_a_cents", "long"), ("p_b_us", "long"), ("p_b_eid", "long"),
-                ("p_b_type", "string"),
-            ):
-                j = j.withColumn(c, F.lit(None).cast(t))
-        else:
-            j = j.join(p, "user_id", "full_outer")
-
-        def takes(bp: str, pp: str):
-            newer = F.struct(F.col(f"{bp}_us"), F.col(f"{bp}_eid")) > F.struct(
-                F.col(f"{pp}_us"), F.col(f"{pp}_eid")
-            )
-            return F.col(f"{bp}_us").isNotNull() & (
-                F.col(f"{pp}_us").isNull() | newer
-            )
-
+        j = ba.join(bb, "user_id", "full_outer").join(p, "user_id", "full_outer")
         a_takes, b_takes = takes("ba", "p_a"), takes("bb", "p_b")
         new = j.select(
             "user_id",
@@ -173,60 +132,43 @@ def ingest_batch_join_mv(
         retract = F.when(
             F.col("__changed") & old_live,
             F.struct(
-                F.col("p_a_type").alias("ga"), F.col("p_b_type").alias("gb"),
-                F.lit(-1).cast("long").alias("dn"),
-                (-F.col("p_a_cents")).cast("long").alias("dc"),
+                F.col("p_a_type").alias("a_type"), F.col("p_b_type").alias("b_type"),
+                F.lit(-1).cast("long").alias("n_pairs"),
+                (-F.col("p_a_cents")).cast("long").alias("sum_a_cents"),
             ),
         )
         add = F.when(
             F.col("__changed") & new_live,
             F.struct(
-                F.col("a_type").alias("ga"), F.col("b_type").alias("gb"),
-                F.lit(1).cast("long").alias("dn"),
-                F.col("a_cents").cast("long").alias("dc"),
+                F.col("a_type").alias("a_type"), F.col("b_type").alias("b_type"),
+                F.lit(1).cast("long").alias("n_pairs"),
+                F.col("a_cents").cast("long").alias("sum_a_cents"),
             ),
         )
-        if mv_bid < int(batch_id):
-            deltas = (
-                new.select(F.explode(F.array_compact(F.array(retract, add))).alias("d"))
-                .select("d.*")
-                .groupBy("ga", "gb")
-                .agg(F.sum("dn").cast("long").alias("dn"), F.sum("dc").cast("long").alias("dc"))
-                .localCheckpoint(eager=True)
-            )
-            if mv_old is None:
-                merged = deltas.select(
-                    F.col("ga").alias("a_type"), F.col("gb").alias("b_type"),
-                    F.col("dn").alias("n_pairs"), F.col("dc").alias("sum_a_cents"),
-                )
-            else:
-                d2 = deltas.select(
-                    F.col("ga").alias("a_type"), F.col("gb").alias("b_type"), "dn", "dc"
-                )
-                merged = (
-                    mv_old.join(d2, ["a_type", "b_type"], "full_outer")
-                    .select(
-                        "a_type", "b_type",
-                        (F.coalesce("n_pairs", F.lit(0)) + F.coalesce("dn", F.lit(0)))
-                        .cast("long").alias("n_pairs"),
-                        (F.coalesce("sum_a_cents", F.lit(0)) + F.coalesce("dc", F.lit(0)))
-                        .cast("long").alias("sum_a_cents"),
-                    )
-                )
-            merged = merged.filter(F.col("n_pairs") > 0)
-            publish_mv_versioned(merged, mv_path, int(batch_id))
-        # else: deltas already aggregated — skip the non-idempotent merge,
-        # re-land the idempotent key state
-        write_state(
-            new.select(
-                "user_id",
-                "a_us", "a_eid", "a_type", "a_cents",
-                "b_us", "b_eid", "b_type",
-                F.lit(int(batch_id)).cast("long").alias("applied_bid"),
-            ),
-            keys_path,
-            key_buckets=key_buckets,
-            key_cols=("user_id",),
+        # the MV commits first, under its own fence (as in streaming/mv.py)
+        publish_mv_deltas(
+            spark,
+            new.select(F.explode(F.array_compact(F.array(retract, add))).alias("d")).select("d.*"),
+            mv_path,
+            batch_id,
+            ("a_type", "b_type"),
+            "n_pairs",
+        )
+        return new.select(
+            "user_id", "a_us", "a_eid", "a_type", "a_cents", "b_us", "b_eid", "b_type"
+        )
+
+    with _state_lock(state_path):
+        fenced_bucket_ingest(
+            spark,
+            batch.select("user_id", "us", "eid", "event_type", "cents"),
+            os.path.join(state_path, "keys"),
+            batch_id,
+            ("user_id",),
+            key_buckets,
+            "a_us long, a_eid long, a_type string, a_cents long, "
+            "b_us long, b_eid long, b_type string",
+            merge,
         )
 
 

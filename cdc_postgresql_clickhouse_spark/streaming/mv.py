@@ -22,15 +22,17 @@ fencing as in ``streaming/fold.py``):
   group, n_users and sum_cents. Deltas are linear (+1/-1, +c/-c), so the
   MV update is a tiny keyed merge. Tombstoned keys contribute nothing —
   a delete retracts the old contribution and adds none.
-- exactly-once: deltas are NOT idempotent, so the MV carries its OWN
-  fence — each batch's aggregate is published as an atomically-swapped
-  versioned directory named by batch id (``streaming/mvstore.py``), and
-  the delta merge is skipped whenever the published id already covers the
-  incoming batch. The key-state merge is an idempotent arg-max and is
-  simply re-applied on replay, so a crash between the two commits in
-  EITHER direction replays to the correct state (MV ahead of keys: merge
-  skipped, keys caught up; keys never ahead: they are written only after
-  the MV swap succeeds).
+- exactly-once: the key table is written through
+  ``operators.state.fenced_bucket_ingest`` (per-bucket ``applied_bid``
+  fence), whose merge computes the new key rows and the deltas. Deltas
+  are NOT idempotent, so the MV carries its OWN fence: each batch's
+  aggregate is published as an atomically-swapped versioned directory
+  named by batch id, and the delta merge (``mvstore.publish_mv_deltas``)
+  is skipped whenever the published id already covers the incoming
+  batch. The keys are written only after the MV swap, so the MV is at or
+  past a batch exactly when every touched key bucket is fenced: a replay
+  of a fully committed batch stops at the key fence, and a crash between
+  the two commits replays into "deltas skipped, keys re-applied".
 - cost per batch: O(touched buckets + batch + |groups|); MV reads are
   O(|groups|) forever, never a scan of the change log.
 
@@ -47,19 +49,15 @@ from pyspark.sql import functions as F
 
 from cdc_postgresql_clickhouse_spark.operators.state import (
     _state_lock,
-    _touched_buckets,
-    _unfenced_buckets_keyed,
-    read_state,
-    write_state,
+    fenced_bucket_ingest,
 )
 from cdc_postgresql_clickhouse_spark.streaming.mvstore import (
-    publish_mv_versioned,
+    publish_mv_deltas,
     read_mv_versioned,
 )
 
 MV_BUCKETS = 8
 _TOMBSTONE = "error"
-_KEY_COLS = ("user_id", "us", "eid", "event_type", "cents", "applied_bid")
 
 
 def ingest_batch_mv(
@@ -73,40 +71,16 @@ def ingest_batch_mv(
     change rows to the key state and the grouped MV."""
     import os
 
-    b = batch.select("user_id", "us", "eid", "event_type", "cents")
-    touched = _touched_buckets(b, ("user_id",), key_buckets)
-    if not touched:
-        return
-    keys_path = os.path.join(state_path, "keys")
     mv_path = os.path.join(state_path, "mv")
-    with _state_lock(state_path):
-        # the MV's own fence (see mvstore.py): resolved FIRST so a replay of
-        # an already-aggregated batch can never double-apply its deltas,
-        # regardless of where a previous attempt crashed
-        mv_old, mv_bid = read_mv_versioned(spark, mv_path)
-        if mv_old is not None:
-            mv_old = mv_old.localCheckpoint(eager=True)
-        prior = read_state(spark, keys_path, buckets=touched)
-        if prior is not None:
-            prior = prior.select(*_KEY_COLS).localCheckpoint(eager=True)
-        # replay of a FULLY committed batch is a no-op: the MV covers it and
-        # every touched key bucket is fenced (a touched bucket with no rows
-        # has not committed); a partially committed key write re-applies
-        # idempotently below
-        if int(batch_id) <= mv_bid and not _unfenced_buckets_keyed(
-            prior, touched, batch_id, key_buckets, ("user_id",)
-        ):
-            return
-        if prior is not None:
-            p = prior.select(
-                "user_id",
-                F.col("us").alias("p_us"),
-                F.col("eid").alias("p_eid"),
-                F.col("event_type").alias("p_type"),
-                F.col("cents").alias("p_cents"),
-            )
-        else:
-            p = None
+
+    def merge(b: DataFrame, prior: DataFrame) -> DataFrame:
+        p = prior.select(
+            "user_id",
+            F.col("us").alias("p_us"),
+            F.col("eid").alias("p_eid"),
+            F.col("event_type").alias("p_type"),
+            F.col("cents").alias("p_cents"),
+        )
         bl = b.groupBy("user_id").agg(
             F.max_by(
                 F.struct("us", "eid", "event_type", "cents"), F.struct("us", "eid")
@@ -118,16 +92,7 @@ def ingest_batch_mv(
             F.col("__b.event_type").alias("b_type"),
             F.col("__b.cents").alias("b_cents"),
         )
-        if p is None:
-            j = bl.select(
-                "*",
-                F.lit(None).cast("long").alias("p_us"),
-                F.lit(None).cast("long").alias("p_eid"),
-                F.lit(None).cast("string").alias("p_type"),
-                F.lit(None).cast("long").alias("p_cents"),
-            )
-        else:
-            j = bl.join(p, "user_id", "full_outer")
+        j = bl.join(p, "user_id", "full_outer")
         in_batch = F.col("b_us").isNotNull()
         has_prior = F.col("p_us").isNotNull()
         newer = F.struct(F.col("b_us"), F.col("b_eid")) > F.struct(
@@ -149,60 +114,41 @@ def ingest_batch_mv(
             F.col("__changed") & F.col("p_type").isNotNull()
             & (F.col("p_type") != _TOMBSTONE),
             F.struct(
-                F.col("p_type").alias("g"),
-                F.lit(-1).cast("long").alias("dn"),
-                (-F.col("p_cents")).cast("long").alias("dc"),
+                F.col("p_type").alias("last_event_type"),
+                F.lit(-1).cast("long").alias("n_users"),
+                (-F.col("p_cents")).cast("long").alias("sum_cents"),
             ),
         )
         add = F.when(
             F.col("__changed") & (F.col("event_type") != _TOMBSTONE),
             F.struct(
-                F.col("event_type").alias("g"),
-                F.lit(1).cast("long").alias("dn"),
-                F.col("cents").cast("long").alias("dc"),
+                F.col("event_type").alias("last_event_type"),
+                F.lit(1).cast("long").alias("n_users"),
+                F.col("cents").cast("long").alias("sum_cents"),
             ),
         )
-        if mv_bid < int(batch_id):
-            deltas = (
-                new.select(F.explode(F.array_compact(F.array(retract, add))).alias("d"))
-                .select("d.*")
-                .groupBy("g")
-                .agg(F.sum("dn").cast("long").alias("dn"), F.sum("dc").cast("long").alias("dc"))
-                .localCheckpoint(eager=True)
-            )
-            if mv_old is None:
-                merged = deltas.select(
-                    F.col("g").alias("last_event_type"),
-                    F.col("dn").alias("n_users"),
-                    F.col("dc").alias("sum_cents"),
-                )
-            else:
-                d2 = deltas.select(F.col("g").alias("last_event_type"), "dn", "dc")
-                merged = (
-                    mv_old.join(d2, "last_event_type", "full_outer")
-                    .select(
-                        "last_event_type",
-                        (F.coalesce("n_users", F.lit(0)) + F.coalesce("dn", F.lit(0)))
-                        .cast("long").alias("n_users"),
-                        (F.coalesce("sum_cents", F.lit(0)) + F.coalesce("dc", F.lit(0)))
-                        .cast("long").alias("sum_cents"),
-                    )
-                )
-            merged = merged.filter(F.col("n_users") > 0)
-            # atomic swap; on success the MV fence records batch_id, so a
-            # crash before the key write below replays into "merge skipped,
-            # keys re-applied idempotently"
-            publish_mv_versioned(merged, mv_path, int(batch_id))
-        # else: replay of a batch whose deltas are already aggregated —
-        # skip the merge (deltas are not idempotent), re-land the keys
-        write_state(
-            new.select(
-                "user_id", "us", "eid", "event_type", "cents",
-                F.lit(int(batch_id)).cast("long").alias("applied_bid"),
-            ),
-            keys_path,
-            key_buckets=key_buckets,
-            key_cols=("user_id",),
+        # the MV commits first, under its own fence: a crash before the
+        # key publish replays into "deltas skipped, keys re-applied"
+        publish_mv_deltas(
+            spark,
+            new.select(F.explode(F.array_compact(F.array(retract, add))).alias("d")).select("d.*"),
+            mv_path,
+            batch_id,
+            ("last_event_type",),
+            "n_users",
+        )
+        return new.select("user_id", "us", "eid", "event_type", "cents")
+
+    with _state_lock(state_path):
+        fenced_bucket_ingest(
+            spark,
+            batch.select("user_id", "us", "eid", "event_type", "cents"),
+            os.path.join(state_path, "keys"),
+            batch_id,
+            ("user_id",),
+            key_buckets,
+            "us long, eid long, event_type string, cents long",
+            merge,
         )
 
 

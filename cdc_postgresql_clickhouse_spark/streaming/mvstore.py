@@ -33,6 +33,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _MANIFEST = "MV_CURRENT"
 
@@ -70,6 +71,42 @@ def read_mv_versioned(
             f"MV manifest {manifest!r} names missing version {name!r}"
         )
     return spark.read.parquet(path), int(name[1:])
+
+
+def publish_mv_deltas(
+    spark: SparkSession,
+    changes: DataFrame,
+    mv_root: str,
+    batch_id: int,
+    group_cols: tuple[str, ...],
+    count_col: str,
+) -> None:
+    """Add one batch's signed ``changes`` (the group columns, then one
+    column per measure, named as in the MV) to the MV and publish the sum as
+    version ``batch_id``: the delta merge of both MV sinks. Skipped when the
+    MV's fence already covers ``batch_id`` — the deltas are NOT idempotent.
+    The changes are summed per group, full-outer-joined to the live version
+    on the group columns and added to its measures; a group whose
+    ``count_col`` falls to 0 is dropped."""
+    mv_old, mv_bid = read_mv_versioned(spark, mv_root)
+    if mv_bid >= int(batch_id):
+        return
+    measures = [c for c in changes.columns if c not in group_cols]
+    merged = (
+        changes.groupBy(*group_cols)
+        .agg(*(F.sum(m).cast("long").alias(m) for m in measures))
+        .localCheckpoint(eager=True)
+    )
+    if mv_old is not None:
+        deltas = merged.select(*group_cols, *(F.col(m).alias(f"d_{m}") for m in measures))
+        merged = mv_old.join(deltas, list(group_cols), "full_outer").select(
+            *group_cols,
+            *(
+                (F.coalesce(m, F.lit(0)) + F.coalesce(f"d_{m}", F.lit(0))).cast("long").alias(m)
+                for m in measures
+            ),
+        )
+    publish_mv_versioned(merged.filter(F.col(count_col) > 0), mv_root, int(batch_id))
 
 
 def publish_mv_versioned(df: DataFrame, mv_root: str, batch_id: int) -> None:

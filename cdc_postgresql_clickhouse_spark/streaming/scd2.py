@@ -77,16 +77,14 @@ def ingest_batch_scd2(
     with _state_lock(state_path):
         state = read_state(spark, state_path, buckets=touched)
         if state is not None:
-            # intervals -> raw rows (lossless: valid_from_es is the es);
-            # localCheckpoint so the bucket publish below never reads its
-            # own input files
+            # intervals -> raw rows (lossless: valid_from_es is the es)
             prior = state.select(
                 "user_id",
                 "event_id",
                 "event_type",
                 "value",
                 F.col("valid_from_es").alias("es"),
-            ).localCheckpoint(eager=True)
+            )
             merged = prior.unionByName(b)
         else:
             merged = b

@@ -6,8 +6,8 @@
   bucket rename, or before the journal is published — must replay to the
   exact uncrashed state: ``read_state`` rolls a torn swap forward (or
   drops an orphan staging dir) and the replayed batch merges idempotently.
-  Covered for the flagship ``run_cdc_pipeline``, the SCD2 writer and the
-  MV key table.
+  Covered for the flagship ``run_cdc_pipeline``, the SCD2 writer, the
+  first-seen fold and the key tables of both MV sinks.
 - the MV sinks (``streaming/mv.py``, ``streaming/join_mv.py``) commit two
   artifacts per batch — the atomically-published versioned MV and the
   bucketed key state. A crash BETWEEN the two must replay to the exact
@@ -669,6 +669,67 @@ def _mv_writer(spark, root):
     return add, drain, final, lambda state: os.path.join(state, "keys")
 
 
+def _first_seen_writer(spark, root):
+    """The first-seen fold: its ``n_events`` is not idempotent, so a replay
+    the per-bucket fence let through twice would show."""
+    from cdc_postgresql_clickhouse_spark.streaming.fold import (
+        read_first_seen,
+        run_incremental_first_seen,
+    )
+
+    chunks = [
+        [(u, 1000 + u) for u in range(1, 9)],
+        [(u, 500 + 10 * u) for u in range(1, 13)],
+    ]
+    src = os.path.join(root, "src")
+
+    def add(i):
+        spark.createDataFrame(chunks[i], "user_id long, us long").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def drain(state, ckpt):
+        run_incremental_first_seen(spark, src, state, ckpt, max_files_per_trigger=1)
+
+    def final(state):
+        return sorted(map(str, read_first_seen(spark, state).collect()))
+
+    return add, drain, final, lambda state: state
+
+
+def _join_mv_writer(spark, root):
+    """The join MV's key table; side A rows have even eids, side B odd."""
+    from cdc_postgresql_clickhouse_spark.operators.state import read_state
+    from cdc_postgresql_clickhouse_spark.streaming.join_mv import (
+        read_join_mv,
+        run_incremental_join_mv,
+    )
+
+    chunks = [
+        [(u, 10, 2 * u, "view", 100 * u) for u in range(1, 9)]
+        + [(u, 10, 2 * u + 1, "click", 0) for u in range(1, 9)],
+        [(u, 20, 100 + 2 * u, "purchase" if u % 3 else "error", 7 * u) for u in range(1, 13)]
+        + [(u, 20, 101 + 2 * u, "cart", 0) for u in range(1, 13, 2)],
+    ]
+    src = os.path.join(root, "src")
+
+    def add(i):
+        spark.createDataFrame(chunks[i], _SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def drain(state, ckpt):
+        run_incremental_join_mv(spark, src, state, ckpt, max_files_per_trigger=1)
+
+    def final(state):
+        keys = read_state(spark, os.path.join(state, "keys"))
+        return sorted(map(str, read_join_mv(spark, state).collect())) + sorted(
+            map(str, keys.collect())
+        )
+
+    return add, drain, final, lambda state: os.path.join(state, "keys")
+
+
 class _InjectedCrash(RuntimeError):
     pass
 
@@ -709,7 +770,9 @@ def _arm_crash(m, point: str) -> list:
 
 @pytest.mark.parametrize("point", ["mid_swap", "pre_journal", "pre_record"])
 @pytest.mark.parametrize(
-    "writer", [_golden_pipeline, _scd2_writer, _mv_writer], ids=["pipeline", "scd2", "mv_keys"]
+    "writer",
+    [_golden_pipeline, _scd2_writer, _mv_writer, _first_seen_writer, _join_mv_writer],
+    ids=["pipeline", "scd2", "mv_keys", "first_seen", "join_mv_keys"],
 )
 def test_crash_inside_bucket_swap_replays_to_uncrashed_state(
     spark, tmp_path, monkeypatch, writer, point

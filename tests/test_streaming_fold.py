@@ -330,3 +330,30 @@ def test_first_seen_fold_split_fence_and_late_data(spark, sf_dir):
         _pd.testing.assert_frame_equal(_canon_fs(read_first_seen(spark, state2)), got)
     finally:
         shutil.rmtree(tmp2, ignore_errors=True)
+
+
+def test_fold_batch_and_fenced_replay_job_counts(spark, sf_dir, tmp_path):
+    """Spark jobs of one steady-state EWMA batch over an existing state and
+    of its fenced replay. The batch runs the touched-bucket scan, the fence
+    (one observed pass over the touched buckets, no shuffle) and the staged
+    publish; the replay stops after the fence. No eager checkpoint of the
+    state: the publish stages before it swaps."""
+    ev = _rows(spark, sf_dir)
+    t_med = ev.agg(F.expr("percentile(us, 0.5)")).first()[0]
+    b1 = ev.filter(F.col("us") <= t_med)
+    b2 = ev.filter(F.col("us") > t_med)
+    state = str(tmp_path / "state")
+    ingest_batch_ewma(spark, b1, state, batch_id=0)
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    steady = jobs(f"fold-{tmp_path.name}", lambda: ingest_batch_ewma(spark, b2, state, batch_id=1))
+    replay = jobs(f"replay-{tmp_path.name}", lambda: ingest_batch_ewma(spark, b2, state, batch_id=1))
+    assert (steady, replay) == (6, 2)
