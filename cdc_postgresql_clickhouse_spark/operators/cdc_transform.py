@@ -16,25 +16,30 @@ Implements, per the reference MV SELECT:
 - P6  epoch-micros -> timestamp decode      (clickhouse_schemas.sql:54-55)
 - P7  output aliasing                       (clickhouse_schemas.sql:50-56)
 
-All expressions are built-in Catalyst functions — whole-stage codegen, no
-Python in the row path, so the transform runs at scan speed at any scale.
+The transform is the MV's SELECT itself: one ``WHERE op IN (...)`` and one
+projection of SQL expressions, so building it costs a few Py4J round trips
+per micro-batch however many columns it projects. All expressions are
+built-in Catalyst functions — whole-stage codegen, no Python in the row
+path, so the transform runs at scan speed at any scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from cdc_postgresql_clickhouse_spark.sources.envelope import ADMITTED_OPS
 
-#: columns taken from the before-image on delete, after-image otherwise.
-SWITCHED_COLUMNS = ("booking_id", "status", "is_canceled")
-SWITCHED_TS_COLUMNS = ("created_at", "modified_at")
+_ADMITTED = "op IN (" + ", ".join(f"'{op}'" for op in ADMITTED_OPS) + ")"
 
 
-def _img(col: str) -> Column:
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _img(col: str) -> str:
     """P3: deletes carry only the before-image; everything else reads after."""
-    return F.when(F.col("op") == "d", F.col(f"before.{col}")).otherwise(F.col(f"after.{col}"))
+    c = _ident(col)
+    return f"CASE WHEN op = 'd' THEN before.{c} ELSE after.{c} END"
 
 
 def changes_to_state_updates(
@@ -54,19 +59,19 @@ def changes_to_state_updates(
     ``extra_image_columns`` (T4): columns added to the source table after
     pipeline start — discovered from the schema-change history
     (``sources.schema_changes``) — projected with the same before/after
-    switch; the state merge widens via allowMissingColumns.
+    switch, after the reference columns; the state merge widens via
+    allowMissingColumns.
     """
-    out = changes.filter(F.col("op").isin(*ADMITTED_OPS))
-    cols = [_img(c).alias(c) for c in (*SWITCHED_COLUMNS, *extra_image_columns)]
-    cols.append(
-        F.when(F.col("op") == "d", F.lit(1)).otherwise(F.lit(0)).alias("is_deleted")
+    return changes.where(_ADMITTED).selectExpr(
+        f"{_img('booking_id')} AS booking_id",
+        f"{_img('status')} AS status",
+        "CASE WHEN op = 'd' THEN 1 ELSE 0 END AS is_deleted",
+        f"{_img('is_canceled')} AS is_canceled",
+        f"timestamp_micros({_img('created_at')}) AS created_at",
+        f"timestamp_micros({_img('modified_at')}) AS modified_at",
+        # P5: `if(op='d', source.lsn, source.lsn)` — the reference's
+        # degenerate conditional constant-folds to the LSN itself (survey §4).
+        "source.lsn AS version",
+        "ts_ms",
+        *(f"{_img(c)} AS {_ident(c)}" for c in extra_image_columns),
     )
-    cols += [F.timestamp_micros(_img(c)).alias(c) for c in SWITCHED_TS_COLUMNS]
-    # P5: `if(op='d', source.lsn, source.lsn)` — the reference's degenerate
-    # conditional constant-folds to the LSN itself (survey §4).
-    cols.append(F.col("source.lsn").alias("version"))
-    cols.append(F.col("ts_ms").alias("ts_ms"))
-    order = ["booking_id", "status", "is_deleted", "is_canceled",
-             "created_at", "modified_at", "version", "ts_ms",
-             *extra_image_columns]
-    return out.select(*cols).select(*order)

@@ -442,7 +442,9 @@ def read_state(
         return None
     if BUCKET_COL in df.columns:
         if buckets is not None:
-            df = df.filter(F.col(BUCKET_COL).isin(buckets))
+            # one SQL IN: Column.isin sends each bucket to the JVM on its own
+            listed = ", ".join(map(str, buckets))
+            df = df.where(f"{BUCKET_COL} IN ({listed})" if buckets else "false")
         df = df.drop(BUCKET_COL)
     if record is not None and "unique_key" in record:
         setattr(df, _UNIQUE_KEY_ATTR, tuple(record["unique_key"]))

@@ -123,8 +123,10 @@ def decode_json_envelopes_with_dlq(
     quarantine them instead — a poisoned message must never stall 100 TB/day
     of flow, and must stay replayable. A record is dead by ``is_dead_letter``
     — the same verdict ``run_cdc_pipeline`` gives; the raw bytes are
-    preserved for replay-after-fix. Both outputs derive from one decode of
-    the same input (shared subtree, no double parse at the source).
+    preserved for replay-after-fix. Both outputs derive from one decode
+    expression of the same input, but each action over either frame runs
+    ``from_json`` again: a caller consuming both persists ``raw`` (or the
+    decode) first, as ``run_cdc_pipeline`` persists its batch.
     """
     decoded = raw.filter(F.col(value_col).isNotNull()).select(
         F.col(value_col).cast("string").alias("__raw"),

@@ -7,6 +7,15 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from cdc_postgresql_clickhouse_spark.operators.cdc_transform import changes_to_state_updates
 from cdc_postgresql_clickhouse_spark.operators.state import apply_changes, current_state
@@ -121,6 +130,21 @@ def test_widened_column_reaches_state(spark):
         F.from_json(F.col("value"), env_schema).alias("e")
     ).select("e.*")
     updates = changes_to_state_updates(decoded, extra_image_columns=("note",))
+    # the whole output schema: names, order, types and nullability (only
+    # the synthesized is_deleted is never NULL); the new column comes last
+    assert updates.schema == StructType(
+        [
+            StructField("booking_id", StringType(), True),
+            StructField("status", StringType(), True),
+            StructField("is_deleted", IntegerType(), False),
+            StructField("is_canceled", BooleanType(), True),
+            StructField("created_at", TimestampType(), True),
+            StructField("modified_at", TimestampType(), True),
+            StructField("version", LongType(), True),
+            StructField("ts_ms", LongType(), True),
+            StructField("note", StringType(), True),
+        ]
+    )
     state = current_state(apply_changes(None, updates))
     rows = {r["booking_id"]: r for r in state.collect()}
     assert rows["b1"]["note"] is None
